@@ -43,12 +43,36 @@ packed corpus and the audit trail. Deliberately immutable snapshots
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dataval_spark.operators import dedup as D
 from dataval_spark.operators import text as X
 from dataval_spark.operators.packing import pack_greedy
+
+
+def _observe(frame: DataFrame, obs: Observation, *aggs: Column) -> DataFrame:
+    """``frame`` with its row count ``n`` (plus ``aggs``) observed into
+    ``obs`` by whichever action first runs it."""
+    return frame.observe(obs, F.count(F.lit(1)).alias("n"), *aggs)
+
+
+def _filled(observations: list[Observation], sc) -> dict:
+    """The metrics of each observation an action has filled, keyed by
+    observation. Never waits for an action (``Observation.get`` blocks
+    until one runs): it only drains Spark's listener bus, which fills an
+    observation a moment after its action returns."""
+
+    def done(obs: Observation) -> bool:
+        return obs._jo is not None and obs._jo.future().isCompleted()
+
+    if not all(map(done, observations)):
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        except Py4JError:
+            pass  # timed out: count what is still missing
+    return {obs: obs.get for obs in observations if done(obs)}
 
 
 def prepare_corpus(
@@ -104,14 +128,30 @@ def prepare_corpus(
     localCheckpoint (see connected_components).
 
     Returns a dict with the per-stage frames, a ``stats`` callable
-    computing the attrition funnel, and a ``release`` callable. By
-    default each stats() count re-derives its (un-persisted) upstream
-    chain — fine for a one-off audit, but an 8-stage funnel recomputed
-    8x is a real bill at 100 TB. ``persist_stages=True`` pins every
-    stage frame (MEMORY_AND_DISK, the same level Suite.clean uses), so
-    each stage's plan executes ONCE no matter how many downstream
-    consumers (stats(), the next stage, user writes) read it; call
-    ``release()`` when done to unpersist them all.
+    returning the attrition funnel, and a ``release`` callable. The
+    funnel counts are observed (``DataFrame.observe``) on actions that
+    run anyway, so stats() after a full action on ``packed`` runs no
+    Spark job:
+    - n_input through n_exact_deduped: the count that materializes the
+      exact-dedup cache, which this call runs itself;
+    - n_near_deduped, n_decontaminated (the same value when no
+      ``benchmark`` is given), n_sampled: the caller's first action on
+      ``packed`` (budget sampling's own per-source pass fills the first
+      two); these sit below the packing window's shuffle, so any action
+      on ``packed`` computes them over every row;
+    - n_packed_bins: the same action, counting bin-start rows. It is
+      used only if that action read every packed row (e.g. a write, not
+      ``limit(1)``), which stats() checks against the rows that entered
+      the packing window.
+    stats() counts any stage whose observation was not filled that
+    way; with persist_stages these counts read the stage caches. The
+    observed metrics stop packing's window from being pruned, so a bare
+    ``packed.count()`` still computes the bins. ``persist_stages=True``
+    pins every stage frame (MEMORY_AND_DISK, the same level Suite.clean
+    uses), so each stage's plan executes ONCE no matter how many
+    downstream consumers (the next stage, user writes, counts) read it.
+    ``release()`` unpersists those pins and this call's own
+    exact/near/paragraph-dedup caches.
 
     Keys: quality_pass (n_url_deduped in stats when ``dedup_url_col``
     is set), exact_deduped, near_deduped (post-semantic-dedup
@@ -152,6 +192,10 @@ def prepare_corpus(
     and cluster resizes (the eval-contamination guard).
     """
     persisted: list[DataFrame] = []
+    swapped: list[tuple[str, DataFrame]] = []
+    # funnel key -> (observed frame, its observation); the observation
+    # is None for a stage stats() always counts
+    stages: dict[str, tuple[DataFrame, Observation | None]] = {}
 
     def _pin(frame: DataFrame) -> DataFrame:
         if persist_stages:
@@ -161,15 +205,32 @@ def prepare_corpus(
             persisted.append(frame)
         return frame
 
+    def _swap(key: str, frame: DataFrame) -> DataFrame:
+        frame = D._cache_swap(key, frame)
+        swapped.append((key, frame))
+        return frame
+
+    def _stage(key: str, frame: DataFrame) -> DataFrame:
+        # a caller's partial action on a returned frame must not be the
+        # first to fill an observation: each observed frame is either
+        # run in full inside this call (up to exact dedup) or reaches the
+        # caller only through `packed`, observed above any pin
+        obs = Observation()
+        frame = _observe(frame, obs)
+        stages[key] = (frame, obs)
+        return frame
+
     def release() -> None:
-        """Unpersist every stage frame pinned by persist_stages=True."""
+        """Unpersist every stage frame pinned by persist_stages=True and
+        this call's own live caches, unless a later call replaced them."""
         for frame in persisted:
             try:
                 frame.unpersist()
             except Exception:
                 pass  # session already stopped
+        for key, frame in swapped:
+            D._cache_release(key, frame)
 
-    raw = docs
     if strip_boilerplate:
         from dataval_spark.operators.boilerplate import remove_boilerplate_lines
 
@@ -177,6 +238,11 @@ def prepare_corpus(
         docs = remove_boilerplate_lines(
             docs, id_col, text_col, max_occurrences=boilerplate_max_occurrences
         )
+    # every stage up to exact dedup is observed under the count that
+    # materializes the exact-dedup cache, before this call returns;
+    # each funnel stage gets its own count so attrition is attributed
+    # to the right stage (URL dedup BEFORE the domain filter)
+    docs = _stage("n_input", docs)
     if dedup_url_col is not None:
         from dataval_spark.operators.urls import url_dedup_key
 
@@ -184,15 +250,13 @@ def prepare_corpus(
         # (no URL evidence — same contract as the dirty-vector rule).
         # Each such doc gets a per-row key so no-URL docs never collapse
         # into one giant group.
-        docs = _pin(D.dedup_keep_first(
+        docs = _stage("n_url_deduped", _pin(D.dedup_keep_first(
             docs, id_col,
             key=F.coalesce(
                 url_dedup_key(F.col(dedup_url_col)),
                 F.concat(F.lit("\x00nourl:"), F.col(id_col).cast("string")),
             ),
-        ))
-    url_deduped = docs  # BEFORE the domain filter: each funnel stage
-    # gets its own count so attrition is attributed to the right stage
+        )))
     if (domain_block is not None or domain_allow is not None):
         from dataval_spark.operators.urls import filter_by_domain
 
@@ -201,9 +265,9 @@ def prepare_corpus(
                 "domain_block/domain_allow need dedup_url_col to name "
                 "the URL column"
             )
-        docs = _pin(filter_by_domain(
+        docs = _stage("n_domain_filtered", _pin(filter_by_domain(
             docs, dedup_url_col, block=domain_block, allow=domain_allow
-        ))
+        )))
     tc = X.token_count(F.col(text_col))
     gate = (
         F.col(text_col).isNotNull()
@@ -250,13 +314,19 @@ def prepare_corpus(
     quality_pass = _pin(quality_pass)
 
     # persist: everything downstream (the simhash cache materialization,
-    # the CC seed checkpoint, the strict orphan check, stats(), and the
-    # user's final writes) re-derives this scan + fingerprint-window
-    # shuffle otherwise — several full passes per pipeline run. Bounded
-    # by the same one-live-cache swap as the pair operators.
-    exact_deduped = D._cache_swap(
+    # the CC seed checkpoint, the strict orphan check, and the user's
+    # final writes) re-derives this scan + fingerprint-window shuffle
+    # otherwise — several full passes per pipeline run. Bounded by the
+    # same one-live-cache swap as the pair operators; its count fills
+    # the funnel up to here.
+    exact_deduped = _swap(
         "prepare_corpus_exact_deduped",
-        D.dedup_keep_first(quality_pass, id_col, text_col),
+        _stage(
+            "n_exact_deduped",
+            D.dedup_keep_first(
+                _stage("n_quality_pass", quality_pass), id_col, text_col
+            ),
+        ),
     )
 
     # exact-code collapse first: the pair join + CC run on distinct
@@ -303,9 +373,7 @@ def prepare_corpus(
         # both layers consume their input TWICE (fingerprint groupBy +
         # join back), which would re-derive the whole upstream funnel
         # per use — pin the post-doc-dedup frame once
-        near_deduped = D._cache_swap(
-            "prepare_corpus_near_deduped", near_deduped
-        )
+        near_deduped = _swap("prepare_corpus_near_deduped", near_deduped)
 
     if paragraph_dedup:
         from dataval_spark.operators.paragraphs import dedup_paragraphs
@@ -320,9 +388,7 @@ def prepare_corpus(
         if paragraph_dedup:
             # the span pass reads its input twice too; don't re-run the
             # paragraph rebuild for each use
-            near_deduped = D._cache_swap(
-                "prepare_corpus_para_deduped", near_deduped
-            )
+            near_deduped = _swap("prepare_corpus_para_deduped", near_deduped)
         # substring-level pass runs on the already-document-deduped
         # corpus (Lee et al.'s ExactSubstr layer: near-dup docs share
         # long spans without being near-dups; rewrite, not row drop)
@@ -341,8 +407,13 @@ def prepare_corpus(
         )
     near_deduped = _pin(near_deduped)
 
+    # from here on the stages are observed on the chain that feeds
+    # packing, filled by the caller's first action on `packed`
     decontaminated = near_deduped
-    if benchmark is not None:
+    if benchmark is None:
+        to_pack = _stage("n_near_deduped", near_deduped)
+        stages["n_decontaminated"] = stages["n_near_deduped"]
+    else:
         exact_hits = D.contamination(near_deduped, benchmark, id_col, text_col)
         fuzzy_hits = D.ngram_contamination(
             near_deduped, benchmark, n=decontam_ngram,
@@ -356,8 +427,20 @@ def prepare_corpus(
         decontaminated = _pin(
             near_deduped.join(contaminated, id_col, "left_anti")
         )
+        if persist_stages:
+            # packing reads the decontaminated pin, whose plan holds
+            # near_deduped's: stats() counts that stage from its cache
+            stages["n_near_deduped"] = (near_deduped, None)
+            to_pack = _stage("n_decontaminated", decontaminated)
+        else:
+            to_pack = _stage(
+                "n_decontaminated",
+                _stage("n_near_deduped", near_deduped).join(
+                    contaminated, id_col, "left_anti"
+                ),
+            )
 
-    sized = decontaminated.withColumn("n_tok", X.token_count(F.col(text_col)))
+    sized = to_pack.withColumn("n_tok", X.token_count(F.col(text_col)))
 
     mixture = None
     if budget_tokens is not None:
@@ -368,6 +451,8 @@ def prepare_corpus(
                 f"budget_tokens set but source column {source_col!r} is "
                 f"missing — mixing needs a per-doc source"
             )
+        # its per-source token pass reads every row of `sized`, so it
+        # fills the near/decontaminated observations before we return
         sized, mixture = sample_to_budget(
             sized, budget_tokens, source_col, "n_tok", id_col,
             tau=mixing_tau, seed=mixing_seed,
@@ -376,7 +461,8 @@ def prepare_corpus(
     sampled_frame = sized  # what "sampled"/n_sampled report: the
     # budget-sampled corpus in DOCUMENT rows, before any chunk explode
     if budget_tokens is not None:
-        sampled_frame = sized = _pin(sampled_frame)
+        sampled_frame = _pin(sampled_frame)
+        sized = _stage("n_sampled", sampled_frame)
     pack_group = lang_col
     if split_spec is not None:
         from dataval_spark.operators.mixing import assign_split
@@ -418,44 +504,49 @@ def prepare_corpus(
 
     # pack_shards: at corpus scale the language key's cardinality bounds
     # the packing sort's parallelism — size ~ cores / n_langs (see
-    # packing.pack_greedy)
-    packed = pack_greedy(
-        sized, "n_tok", window_tokens, pack_group, pack_order,
-        n_shards=pack_shards,
+    # packing.pack_greedy). Bins are counted as bin-start rows per
+    # (group, shard), so split_spec's (lang, split) bins count apart.
+    # Rows entering the window are observed below its shuffle, so every
+    # action fills that count in full; the packed-row count equals it
+    # only if the action read every packed row.
+    pack_input, packed_rows = Observation(), Observation()
+    flagged = pack_greedy(
+        _observe(sized, pack_input), "n_tok", window_tokens, pack_group,
+        pack_order, n_shards=pack_shards, start_col="_bin_start",
     )
+    packed = _observe(
+        flagged, packed_rows, F.count_if(F.col("_bin_start")).alias("bins")
+    ).drop("_bin_start")
     if split_long:
         packed = packed.drop("_pack_order")
     if split_spec is not None:
         packed = packed.drop("_pack_group")
     packed = _pin(packed)
 
+    sc = docs.sparkSession.sparkContext
+
     def stats() -> dict:
-        # one count() per stage; with persist_stages each reads its
-        # stage's cache instead of re-deriving the upstream chain
-        # (audit-run cost otherwise, documented in the docstring)
-        return {
-            "n_input": raw.count(),
-            **(
-                {"n_url_deduped": url_deduped.count()}
-                if dedup_url_col is not None
-                else {}
-            ),
-            **(
-                {"n_domain_filtered": docs.count()}
-                if (domain_block is not None or domain_allow is not None)
-                else {}
-            ),
-            "n_quality_pass": quality_pass.count(),
-            "n_exact_deduped": exact_deduped.count(),
-            "n_near_deduped": near_deduped.count(),
-            "n_decontaminated": decontaminated.count(),
-            **(
-                {"n_sampled": sampled_frame.count()}
-                if budget_tokens is not None
-                else {}
-            ),
-            "n_packed_bins": packed.select(lang_col, "bin").distinct().count(),
-        }
+        # observed values where an action filled them (see docstring); a
+        # count() for the rest, once per distinct stage frame
+        observations = [obs for _, obs in stages.values() if obs is not None]
+        seen = _filled([*observations, pack_input, packed_rows], sc)
+        counts: dict[int, int] = {}
+        funnel = {}
+        for key, (frame, obs) in stages.items():
+            if id(frame) not in counts:
+                counts[id(frame)] = (
+                    seen[obs]["n"] if obs in seen else frame.count()
+                )
+            funnel[key] = counts[id(frame)]
+        complete = (
+            packed_rows in seen and pack_input in seen
+            and seen[packed_rows]["n"] == seen[pack_input]["n"]
+        )
+        funnel["n_packed_bins"] = (
+            seen[packed_rows]["bins"] if complete
+            else flagged.where(F.col("_bin_start")).count()
+        )
+        return funnel
 
     return {
         "quality_pass": quality_pass,

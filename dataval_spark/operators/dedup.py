@@ -71,6 +71,18 @@ def _cache_swap(key: str, df: DataFrame) -> DataFrame:
     return df
 
 
+def _cache_release(key: str, df: DataFrame) -> None:
+    """Unpersist ``df`` only while it is still the live entry for ``key``
+    (a later call's entry is that call's to release)."""
+    skey = (key, id(df.sparkSession))
+    if _live_caches.get(skey) is df:
+        del _live_caches[skey]
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # stopped/replaced session: nothing left to unpersist
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a frame to cluster parallelism — ONLY when
     its physical plan has fewer partitions than the cluster has slots.

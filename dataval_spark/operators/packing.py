@@ -36,6 +36,7 @@ def pack_greedy(
     order_col: str,
     out_col: str = "bin",
     n_shards: int = 1,
+    start_col: str | None = None,
 ) -> DataFrame:
     """Pack into ``out_col`` bins of ~``budget`` tokens per ``group_col``.
 
@@ -45,6 +46,10 @@ def pack_greedy(
     validity, parallel sorts, at the price of <= k partially-filled bins
     per group. Deterministic either way (shard id is a pure hash of the
     order key, not a partition id).
+
+    ``start_col`` additionally emits a boolean column that is true on
+    each bin's first row, computed in the same window (no extra shuffle
+    or sort): its true rows count the bins without a ``distinct()`` pass.
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -56,13 +61,21 @@ def pack_greedy(
             F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_shards)).cast("int"),
         )
         shard = [F.col("_pack_shard")]
-    w = (
-        Window.partitionBy(F.col(group_col), *shard)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev = F.coalesce(F.sum(token_col).over(w), F.lit(0))
-    binned = out.withColumn(out_col, F.floor(prev / F.lit(budget)).cast("int"))
+    spec = Window.partitionBy(F.col(group_col), *shard).orderBy(order_col)
+    w = spec.rowsBetween(Window.unboundedPreceding, -1)
+
+    def bin_after(frame) -> Column:
+        prev = F.coalesce(F.sum(token_col).over(frame), F.lit(0))
+        return F.floor(prev / F.lit(budget)).cast("int")
+
+    binned = out.withColumn(out_col, bin_after(w))
+    if start_col is not None:
+        # a row opens a bin when it is first in its (group, shard) or
+        # its bin differs from the previous row's, whose offset is the
+        # sum up to two rows back: one more frame on the same spec
+        first = F.count(F.lit(1)).over(w) == 0
+        prev_bin = bin_after(spec.rowsBetween(Window.unboundedPreceding, -2))
+        binned = binned.withColumn(start_col, first | (F.col(out_col) != prev_bin))
     if n_shards > 1:
         # globally unique bin id per (group, shard, local bin) so
         # downstream consumers can group on (group_col, out_col) alone

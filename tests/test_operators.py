@@ -3,6 +3,8 @@ similarity, text, multimodal) on small, hand-checkable inputs."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -891,12 +893,9 @@ def test_ngram_contamination(spark):
     assert hits[1] == 4
 
 
-def test_prepare_corpus_full_funnel(spark):
-    """The composed pipeline (quality gate -> exact dedup -> near dedup
-    -> decontamination -> packing) drops exactly the rows each stage
-    owns, on a corpus planted with one offender per stage."""
-    from dataval_spark.operators.corpus import prepare_corpus
-
+def _planted_funnel(spark):
+    """(docs, benchmark): a corpus planted with one offender per funnel
+    stage."""
     base = (
         "alpha beta gamma delta epsilon zeta eta theta iota kappa "
         "lambda mu nu xi omicron pi rho sigma tau upsilon"
@@ -920,7 +919,16 @@ def test_prepare_corpus_full_funnel(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     bench = spark.createDataFrame([(100, bench_text)], "doc_id long, text string")
+    return docs, bench
 
+
+def test_prepare_corpus_full_funnel(spark):
+    """The composed pipeline (quality gate -> exact dedup -> near dedup
+    -> decontamination -> packing) drops exactly the rows each stage
+    owns, on a corpus planted with one offender per stage."""
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    docs, bench = _planted_funnel(spark)
     out = prepare_corpus(
         docs, benchmark=bench, min_tokens=5, simhash_bits=60, max_hamming=3
     )
@@ -934,6 +942,98 @@ def test_prepare_corpus_full_funnel(spark):
     assert kept == {1, 7}
     assert s["n_packed_bins"] >= 1
     assert "bin" in out["packed"].columns
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_prepare_corpus_stats_observed(spark, tmp_path):
+    """stats() reads the funnel off the actions that already ran: after a
+    full write of `packed` it starts no Spark job. With no prior action,
+    or after a partial one that fills the packed-side observations with
+    partial values, it counts instead and returns the same funnel."""
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    docs, bench = _planted_funnel(spark)
+    # a 10-token window puts the two survivors (21 and 16 tokens) in
+    # bins 0 and 2, so a partial read of `packed` sees fewer bin starts
+    kw = dict(benchmark=bench, min_tokens=5, window_tokens=10)
+    want = {
+        "n_input": 7, "n_quality_pass": 5, "n_exact_deduped": 4,
+        "n_near_deduped": 3, "n_decontaminated": 2, "n_packed_bins": 2,
+    }
+
+    written = prepare_corpus(docs, **kw)
+    path = str(tmp_path / "packed")
+    written["packed"].write.mode("overwrite").partitionBy("lang").parquet(path)
+    s, jobs = _jobs_run_by(spark, written["stats"])
+    assert jobs == 0
+    assert s == want
+    on_disk = spark.read.parquet(path).select("lang", "bin").distinct().count()
+    assert on_disk == s["n_packed_bins"]
+
+    unread = prepare_corpus(docs, **kw)
+    s, jobs = _jobs_run_by(spark, unread["stats"])
+    assert s == want and jobs > 0
+
+    partial = prepare_corpus(docs, **kw)
+    assert len(partial["packed"].limit(1).collect()) == 1
+    assert partial["stats"]() == want
+
+    # packing reads the decontaminated pin; near_deduped is counted
+    pinned = prepare_corpus(docs, persist_stages=True, **kw)
+    pinned["packed"].write.mode("overwrite").parquet(str(tmp_path / "pinned"))
+    assert pinned["stats"]() == want
+    for out in (written, unread, partial, pinned):
+        out["release"]()
+
+
+def test_prepare_corpus_release_unpersists_own_caches(spark):
+    """release() drops the live caches the call pinned itself (exact,
+    near and paragraph dedup), but not another call's that replaced
+    them."""
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    quote = "a famous passage quoted verbatim in many documents exactly"
+    rows = [
+        (1, "own opening paragraph with sufficient words\n\n" + quote, "en"),
+        (2, quote + "\n\nanother document distinct trailing paragraph", "en"),
+        (3, "third document fully original text with enough tokens", "en"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    kw = dict(min_tokens=3, paragraph_dedup=True, remove_spans=True, span_tokens=8)
+    sc = spark.sparkContext
+
+    def cached_frames() -> int:
+        # DataFrame caches are named after their plan; the unnamed
+        # localCheckpoint RDDs of the CC rounds are left to the cleaner
+        rdds = sc._jsc.getPersistentRDDs().values()
+        return sum(1 for rdd in rdds if rdd.name() is not None)
+
+    # the SimHash operator's own live caches swap one for one from the
+    # second call on
+    prepare_corpus(docs, **kw)["release"]()
+    before = cached_frames()
+    first = prepare_corpus(docs, **kw)
+    assert cached_frames() == before + 3
+    second = prepare_corpus(docs, **kw)
+    first["release"]()  # its entries were already replaced by second's
+    assert second["exact_deduped"].storageLevel.useMemory
+    assert cached_frames() == before + 3
+    second["release"]()
+    assert not second["exact_deduped"].storageLevel.useMemory
+    assert cached_frames() == before
 
 
 def test_text_ops_unicode_and_edge_cases(spark):
@@ -1192,12 +1292,12 @@ def test_prepare_corpus_web_stages(spark):
 
 
 def test_prepare_corpus_persist_stages_single_pass(spark):
-    """persist_stages=True pins every stage frame so stats() reads each
-    stage's cache instead of re-deriving the whole upstream chain per
-    count (the round-4 '8-stage funnel recomputed 8x' bill). Funnel
-    values are identical either way; the stats-visible frames must
-    resolve to InMemoryTableScan with no upstream Exchange in the
-    executed plan."""
+    """persist_stages=True pins every stage frame, so each consumer of a
+    stage frame (the next stage, a user write, a stats() count of a
+    stage no action has observed yet) reads its cache instead of
+    re-deriving the whole upstream chain. Funnel values are identical
+    either way; the stage frames must resolve to InMemoryTableScan with
+    no upstream Exchange in the executed plan."""
     from pyspark.sql import functions as F
 
     from dataval_spark.operators.corpus import prepare_corpus
@@ -1345,6 +1445,12 @@ def test_prepare_corpus_split_assignment_pure_packing(spark):
     # and consumers must group on (lang, split, bin)
     splits_seen = Counter(s.pop() for s in by_doc.values())
     assert len(splits_seen) >= 2  # the spec actually produced >1 split
+    # so n_packed_bins counts (lang, split, bin) groups; the fixture has
+    # splits sharing a bin id, which a (lang, bin) count would merge
+    bins = {(r.lang, r.split, r.bin) for r in packed}
+    assert len({(r.lang, r.bin) for r in packed}) < len(bins)
+    assert out["stats"]()["n_packed_bins"] == len(bins)
+    assert out2["stats"]()["n_packed_bins"] == len(bins)
 
 
 def test_prepare_corpus_span_removal(spark):
