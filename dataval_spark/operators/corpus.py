@@ -43,7 +43,6 @@ packed corpus and the audit trail. Deliberately immutable snapshots
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -56,23 +55,6 @@ def _observe(frame: DataFrame, obs: Observation, *aggs: Column) -> DataFrame:
     """``frame`` with its row count ``n`` (plus ``aggs``) observed into
     ``obs`` by whichever action first runs it."""
     return frame.observe(obs, F.count(F.lit(1)).alias("n"), *aggs)
-
-
-def _filled(observations: list[Observation], sc) -> dict:
-    """The metrics of each observation an action has filled, keyed by
-    observation. Never waits for an action (``Observation.get`` blocks
-    until one runs): it only drains Spark's listener bus, which fills an
-    observation a moment after its action returns."""
-
-    def done(obs: Observation) -> bool:
-        return obs._jo is not None and obs._jo.future().isCompleted()
-
-    if not all(map(done, observations)):
-        try:
-            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        except Py4JError:
-            pass  # timed out: count what is still missing
-    return {obs: obs.get for obs in observations if done(obs)}
 
 
 def prepare_corpus(
@@ -120,11 +102,13 @@ def prepare_corpus(
     split_spec: dict[str, float] | None = None,
     split_seed: int = 0,
 ) -> dict:
-    """Run the full preparation flow. NOTE: the near-dedup phase
-    (SimHash code materialization + connected-components iteration) runs
+    """Run the full preparation flow. NOTE: the near-dedup phase runs
     EAGERLY at call time — this is a pipeline runner, not a plan
-    builder. On a real cluster pass ``checkpoint_dir`` so the CC rounds
-    use reliable checkpoint() (executor-loss-safe) instead of
+    builder: the SimHash codes are materialized and connected components
+    checkpoints the rep pairs, then labels them on the driver when they
+    fit the broadcast threshold or in Spark rounds when they do not. On
+    a real cluster pass ``checkpoint_dir`` so those checkpoints are
+    reliable checkpoint() (executor-loss-safe) instead of
     localCheckpoint (see connected_components).
 
     Returns a dict with the per-stage frames, a ``stats`` callable
@@ -529,7 +513,7 @@ def prepare_corpus(
         # observed values where an action filled them (see docstring); a
         # count() for the rest, once per distinct stage frame
         observations = [obs for _, obs in stages.values() if obs is not None]
-        seen = _filled([*observations, pack_input, packed_rows], sc)
+        seen = D._filled([*observations, pack_input, packed_rows], sc)
         counts: dict[int, int] = {}
         funnel = {}
         for key, (frame, obs) in stages.items():

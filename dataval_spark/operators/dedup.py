@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dataval_spark.operators.text import normalize, token_count, tokens
@@ -95,11 +96,43 @@ def fan_out(df: DataFrame) -> DataFrame:
     idled. At production scale the scan has thousands of splits and this
     helper is a no-op (shuffling a corpus of raw text to gain
     parallelism it already has would be pure cost), so the condition is
-    the partition count, not the data size."""
-    sc = df.sparkSession.sparkContext
-    n = df.rdd.getNumPartitions()
-    p = sc.defaultParallelism
+    the partition count, not the data size. The count is read from the
+    plan (see _planned_partitions): ``df.rdd`` on a frame with shuffles
+    runs its upstream stages just to report it."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    n = _planned_partitions(df._jdf.queryExecution().executedPlan())
     return df.repartition(p) if n < p else df
+
+
+def _planned_partitions(plan) -> int:
+    """Output partition count of a JVM physical plan, without running it.
+
+    A shuffle counts as its declared width. Adaptive execution can
+    coalesce it at run time, but it keeps at least the cluster
+    parallelism unless the whole shuffle is under parallelism ×
+    coalescePartitions.minPartitionSize (1 MB): only such a tiny frame
+    gets a different answer than its executed RDD (no repartition where
+    the RDD would show fewer partitions than slots). Nodes of unknown
+    partitioning keep their children's count (the sum, for a union), a
+    broadcast join its streamed side's, and a cached frame its cached
+    plan's. Only a leaf builds its RDD, which lists input splits and
+    runs no job."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":  # exchanges are planned in initialPlan
+        return _planned_partitions(plan.initialPlan())
+    if name == "InMemoryTableScan":
+        return _planned_partitions(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    seq = plan.children()
+    kids = [
+        c for c in (seq.apply(i) for i in range(seq.size()))
+        if c.nodeName() != "BroadcastExchange"
+    ]
+    if not kids:
+        return plan.execute().getNumPartitions()
+    return sum(_planned_partitions(c) for c in kids)
 
 
 # ------------------------------------------------ salted self-pair join
@@ -669,6 +702,23 @@ def simhash_near_pairs(
 
 
 # ------------------------------------------------- dedup cluster assembly
+def _filled(observations: list[Observation], sc) -> dict:
+    """The metrics of each observation an action has filled, keyed by
+    observation. Never waits for an action (``Observation.get`` blocks
+    until one runs): it only drains Spark's listener bus, which fills an
+    observation a moment after its action returns."""
+
+    def done(obs: Observation) -> bool:
+        return obs._jo is not None and obs._jo.future().isCompleted()
+
+    if not all(map(done, observations)):
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        except Py4JError:
+            pass  # timed out: count what is still missing
+    return {obs: obs.get for obs in observations if done(obs)}
+
+
 def _pin_round(df: DataFrame) -> DataFrame:
     """Pin an intra-probe intermediate (MEMORY_AND_DISK). Every later
     reference resolves to the SAME InMemoryRelation, and the block
@@ -683,145 +733,60 @@ def _pin_round(df: DataFrame) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _star_round(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """ONE large-star + small-star alternation (Kiveris et al., SoCC'14).
-    Returns (round_output, pinned_intermediate) — the caller unpersists
-    the pin after its probe action has run.
-
-    Both star steps are a groupBy-min + equi-join back on the same key,
-    NOT a window-min: a window forces every row of one key into a single
-    task's sort buffer, and AQE skew-splitting applies to joins, not
-    windows — a high-degree hub (exactly the adversarial-skew case this
-    path exists for) would become an unsplittable single-task straggler.
-    The groupBy side is map-side combinable and the join AQE-splittable,
-    so a hub key costs a skew-split join, never a one-task spill. The
-    join-back means each step consumes its input twice (agg + probe),
-    which is why the large-star output is pinned (computed once, block
-    locks) instead of recomputed per consumer.
-    """
-    # both directions from ONE pass over the upstream blocks
-    bidir = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
-                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-            )
-        ).alias("_e")
-    ).select("_e.a", "_e.b")
-    # -------- large-star -------- m = min(N(u) + {u}); attach every
-    # larger neighbor to m. groupBy-min (map-side combine) + equi-join.
-    mn = bidir.groupBy("a").agg(F.min("b").alias("_mn"))
-    ls = (
-        bidir.join(mn, "a")
-        .where(F.col("b") > F.col("a"))
-        .select(
-            F.least(F.col("a"), F.col("_mn")).alias("a"),
-            F.col("b").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    ls = _pin_round(ls)
-    # -------- small-star -------- direct every edge down: (hi, lo);
-    # m = min(N_smaller(hi) + {hi}) = min over the lo side; emit
-    # (m, lo) and (m, hi) from one explode over the joined row.
-    down = ls.select(F.col("b").alias("hi"), F.col("a").alias("lo"))
-    m = down.groupBy("hi").agg(F.min("lo").alias("_m"))
-    ss = (
-        down.join(m, "hi")
-        .select(
-            F.col("_m").alias("a"),
-            F.explode(F.array("lo", "hi")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    return ss, ls
-
-
-def _star_rounds(edges: DataFrame, _ckpt, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm) until the edge set is a fixed point: every surviving edge
-    then links a node directly to its component's minimum id.
-
-    * large-star: per node u, hook every LARGER neighbor to
-      m = min(N(u) + {u}) — emitted edges (m, v) for v in N(u), v > u.
-    * small-star: per node u (over edges pointing down), hook u and all
-      its smaller neighbors to m = min(N_smaller(u) + {u}).
-
-    Driver-action economy: each PROBE runs TWO star rounds and pays ONE
-    action — round 1's output is pinned (persist + block-locks: computed
-    once however many round-2 stages read it), round 2 is lazily
-    checkpointed, and the probe-end signature aggregation materializes
-    it. Convergence is monotone (edges only ever move toward smaller
-    ids), so probing every other round never misses the fixed point —
-    the extra round past convergence re-derives the same edge set, the
-    signature repeats, and the loop stops. Halves the per-round driver
-    barrier that dominates deep components. Convergence is O(log^2 n)
-    rounds on ADVERSARIAL graphs (long chains, skewed components) where
-    halving's per-round neighbor-min can stall. The per-probe checksum
-    fixed point is a true termination proof, not a heuristic.
-    """
-    edges = edges.where(F.col("a") != F.col("b")).select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    ).distinct()
-    prev_sig = None
-    for _ in range((max_iter + 1) // 2):
-        r1, pin1 = _star_round(edges)
-        r1 = _pin_round(r1)
-        r2, pin2 = _star_round(r1)
-        # the probe-end checkpoint is LAZY: the signature aggregation
-        # below is the probe's ONLY driver action and doubles as the
-        # checkpoint materialization (local mode). Reliable-dir mode
-        # stays eager: a lazy reliable checkpoint would recompute the
-        # frame to write it after the action.
-        edges = _ckpt(r2, eager_needed=False)
-        # fixed point: count + two independent order-insensitive hash
-        # sums (one driver action; edges monotonically descend toward
-        # component minima so a stable signature IS convergence).
-        # decimal(38,0), not bigint: Spark 4 runs ANSI mode, and summing
-        # raw 64-bit hashes overflows long after a handful of edges.
-        sig = tuple(
-            edges.agg(
-                F.count(F.lit(1)),
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-                F.sum(F.xxhash64("b", "a").cast("decimal(38,0)")),
-            ).collect()[0]
-        )
-        for p in (pin1, r1, pin2):
-            p.unpersist()
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    return edges
-
-
 def connected_components(
     ids: DataFrame, pairs: DataFrame, id_col: str = "doc", max_iter: int = 25,
     checkpoint_dir: str | None = None, strict: bool = True,
-    algorithm: str = "halving",
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (doc, cluster) where
     cluster = the minimum doc id in the component (the canonical
-    survivor). Min-label propagation with PATH HALVING: each round a
-    node takes the min over its own label, its neighbors' labels, and
-    its label's label (one pointer hop) - pointer jumping turns
-    O(diameter) convergence into O(log diameter) rounds — near-dup clusters are shallow (dups of dups), so
-    a handful of rounds suffice. Each round is one join + one groupBy
-    with map-side combine; checkpointing cuts the lineage so the
-    plan does not grow with iterations. The same loop shape scales to the published
-    large-star/small-star algorithm at adversarial graph sizes — same
-    loop shape.
+    survivor). The output universe is exactly ``ids``: one row per
+    ``ids`` row, a doc without pairs labeled by itself.
 
-    ``checkpoint_dir``: when given, rounds use RELIABLE ``checkpoint()``
-    (blocks written to the dir, survives executor loss — required on a
-    real cluster, where losing one executor's localCheckpoint blocks
-    fails the whole iteration lineage); default ``localCheckpoint`` is
-    the right call in local mode (no HDFS round-trip per iteration).
-    NOTE: setCheckpointDir is SESSION-GLOBAL — other checkpoint() users
-    in the application will write there too. Each round snapshots the
-    labels frame into the dir; sessions from get_spark() enable
+    The directed pair set is checkpointed first; the same action
+    observes its row count, which picks one of two paths:
+
+    * Driver pass — when the pairs' estimated size (rows × Spark's
+      per-row size) is within the session's
+      ``spark.sql.autoBroadcastJoinThreshold``, the size Spark already
+      collects to the driver for a broadcast-join build side (-1 turns
+      this path off). The pairs come to the driver as Arrow and one
+      vectorized numpy pass labels every endpoint (_component_min, ids
+      kept in their own dtype: bigints above 2^53 stay exact); the
+      labels of the non-minimum nodes go back as a local frame,
+      left-joined onto ``ids``. No per-round checkpoints, pins or
+      probes: a near-dup rep graph is usually this small (the sf1.0
+      corpus's 223k pairs are ~5 MB), and the rounds' cost on it is
+      per-stage job latency, not data.
+    * Rounds — the scale path above that bound: min-label propagation
+      with PATH HALVING. Each round a node takes the min over its own
+      label, its neighbors' labels, and its label's label (one pointer
+      hop), which turns O(diameter) convergence into O(log diameter)
+      rounds; each round is one join + one groupBy with map-side
+      combine, at the session's shuffle width. Two rounds share one
+      driver action (the probe) and checkpointing cuts the lineage, so
+      the plan does not grow with iterations. ``max_iter`` caps these
+      rounds; the driver pass always runs to convergence.
+
+    ``strict`` (default): every pair endpoint must be in ``ids``; if any
+    endpoint — NULL included — is missing, the call raises instead of
+    returning silently wrong clusters. The rounds check with an
+    anti-join of the endpoints against the seeds; the driver pass with
+    a semi-join that streams ``ids`` past the broadcast endpoints (no
+    shuffle of ``ids``, result bounded by the endpoints) and takes the
+    difference in numpy. With ``strict=False`` a missing endpoint gets
+    no label row and relays no label between its neighbors — the
+    rounds never reach it, the driver pass drops every edge that
+    touches it — so both paths SPLIT a cluster at it the same way.
+
+    ``checkpoint_dir``: when given, the pair set and the rounds use
+    RELIABLE ``checkpoint()`` (blocks written to the dir, survives
+    executor loss — required on a real cluster, where losing one
+    executor's localCheckpoint blocks fails the whole iteration
+    lineage); default ``localCheckpoint`` is the right call in local
+    mode (no HDFS round-trip per iteration). NOTE: setCheckpointDir is
+    SESSION-GLOBAL — other checkpoint() users in the application will
+    write there too. Each round snapshots the labels frame into the
+    dir; sessions from get_spark() enable
     spark.cleaner.referenceTracking.cleanCheckpoints so superseded
     rounds' files are deleted on GC — set it yourself on foreign
     sessions, or point checkpoint_dir at a run-scoped path you delete.
@@ -834,27 +799,8 @@ def connected_components(
     Spark 4.1 Catalyst bug: Union.rewriteConstraints throws
     NoSuchElementException when a filter-derived alias-equivalence
     constraint from ``ids``' lineage crosses the union (checkpointing
-    does not help — LogicalRDD propagates constraints). Consequence:
-    the output universe is exactly ``ids`` — pair endpoints absent from
-    the seed set get no label row AND cannot relay labels between their
-    neighbors, so a violated seed contract would SPLIT clusters. With
-    ``strict`` (default) that contract failure is loud: one id-width
-    anti-join up front raises if any pair endpoint is missing from
-    ``ids``, instead of returning silently wrong clusters.
-    ``algorithm``: ``"halving"`` (default) is the min-label + path
-    halving loop above — the right choice for near-dup graphs (shallow,
-    bounded components). ``"star"`` switches to alternating large-star/
-    small-star (_star_rounds) for adversarial shapes — very long chains
-    or heavily skewed components — where convergence is
-    O(log^2 n) rounds independent of component diameter. Both return
-    identical (doc, cluster = component min) labelings over ``ids``.
-    One behavioral difference under ``strict=False``: star PROPAGATES
-    THROUGH pair endpoints missing from ``ids`` (they participate in the
-    edge rounds, they just get no output row), while halving splits at
-    them — another reason strict stays the default.
+    does not help — LogicalRDD propagates constraints).
     """
-    if algorithm not in ("halving", "star"):
-        raise ValueError(f"algorithm must be 'halving' or 'star', got {algorithm!r}")
     if checkpoint_dir is not None:
         sc = ids.sparkSession.sparkContext
         sc.setCheckpointDir(checkpoint_dir)
@@ -879,75 +825,125 @@ def connected_components(
     # subtree, so a single checkpoint of the union evaluated the whole
     # (often expensive) pair join twice — measured 7.2 s vs 3.5 s on the
     # 223k-edge corpus rep graph at sf1.0
+    n_raw = Observation()
     raw = _ckpt(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .observe(n_raw, F.count(F.lit(1)).alias("n"))
     )
+    if _broadcast_sized(raw, n_raw):
+        return _cc_driver(ids.select(F.col(id_col).alias("doc")), raw, strict)
     edges = _ckpt(
         raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
     labels = _ckpt(
         ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label"))
     )
-    # Scope the shuffle-partition count of the iterative rounds to the
-    # MEASURED graph size (edges is checkpointed, so the count is a
-    # cheap metadata-ish job). Each probe is ~6-8 exchange stages over
-    # frames that are usually tiny relative to the session's shuffle
-    # width, and AQE's coalescing keeps >= defaultParallelism partitions
-    # (coalescePartitions.parallelismFirst), so at the session default a
-    # probe pays hundreds of near-empty task launches — measured at
-    # sf1.0: the identical 446k-edge CC ran 12.2 s at 64 shuffle
-    # partitions vs 4.8 s at 8. ~200k edges per partition keeps the
-    # per-task join work real; a 10^9-edge graph stays at the session
-    # width (the cap), so this is scale-adaptive, not a small-corpus
-    # constant. The conf is session-global: set/restore is safe here
-    # because the loop is driver-synchronous (batch operator, same
-    # contract as _cache_swap's eager action); plans compiled after the
-    # finally see the original value.
-    spark = ids.sparkSession
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    n_edges = edges.count()
-    scoped_sp = max(4, min(int(prev_sp), (n_edges + 199_999) // 200_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(scoped_sp))
-    try:
-        return _cc_rounds(
-            ids, raw, edges, labels, id_col, max_iter, strict, algorithm,
-            _ckpt,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-
-def _cc_rounds(
-    ids, raw, edges, labels, id_col, max_iter, strict, algorithm, _ckpt
-) -> DataFrame:
     if strict:
-        # edges carry both directions, so the a-side covers every endpoint
-        orphans = (
-            edges.select(F.col("a").alias("doc")).distinct()
-            .join(labels, "doc", "left_anti")
-        )
-        sample = [r.doc for r in orphans.limit(5).collect()]
+        ends = raw.select(F.explode(F.array("a", "b")).alias("doc"))
+        orphans = ends.join(labels, "doc", "left_anti").limit(5)
+        sample = [r.doc for r in orphans.collect()]
         if sample:
-            raise ValueError(
-                f"pair endpoints missing from the seed ids (first 5: "
-                f"{sample}) — labels cannot propagate through unlabeled "
-                f"nodes; add them to ids or pass strict=False to label "
-                f"only the seeded subgraph"
-            )
-    if algorithm == "star":
-        star = _star_rounds(raw, _ckpt, max_iter)
-        # at the fixed point every edge is (component_min, member);
-        # groupBy-min is belt-and-braces for the max_iter-capped case
-        member_lbl = star.groupBy(F.col("b").alias("doc")).agg(
-            F.min("a").alias("cluster")
-        )
-        return (
-            labels.select("doc")
-            .join(member_lbl, "doc", "left")
-            .select(
-                "doc", F.coalesce("cluster", F.col("doc")).alias("cluster")
-            )
-        )
+            raise _seed_error(sample)
+    return _cc_rounds(edges, labels, max_iter, _ckpt)
+
+
+def _broadcast_sized(raw: DataFrame, n_raw: Observation) -> bool:
+    """Whether the checkpointed pair set ``raw`` (row count observed
+    into ``n_raw``) fits the broadcast-join threshold. The threshold is
+    the session's parsed value: the conf accepts size strings such as
+    ``10MB``."""
+    spark = raw.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0:
+        return False
+    seen = _filled([n_raw], spark.sparkContext)
+    n = seen[n_raw]["n"] if n_raw in seen else raw.count()
+    # Spark's row-size estimate: 8 bytes of row overhead + column widths
+    return n * (8 + raw._jdf.schema().defaultSize()) <= limit
+
+
+def _seed_error(missing: list) -> ValueError:
+    return ValueError(
+        f"pair endpoints missing from the seed ids (first 5: "
+        f"{missing[:5]}) — labels cannot propagate through unlabeled "
+        f"nodes; add them to ids or pass strict=False to label "
+        f"only the seeded subgraph"
+    )
+
+
+def _cc_driver(seeds: DataFrame, raw: DataFrame, strict: bool) -> DataFrame:
+    """connected_components' driver pass over the collected pairs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = raw.toArrow()
+    n_pairs = tbl.num_rows
+    tbl = tbl.filter(pc.and_(pc.is_valid(tbl["a"]), pc.is_valid(tbl["b"])))
+    has_null = tbl.num_rows < n_pairs
+    a, b = tbl["a"].to_numpy(), tbl["b"].to_numpy()
+    # the seed check, without shuffling ids: a semi-join streams ids past
+    # the broadcast endpoints; what it does not find is missing (NULL
+    # never matches)
+    ends = raw.select(F.explode(F.array("a", "b")).alias("doc"))
+    found = seeds.join(F.broadcast(ends), "doc", "left_semi").toArrow()["doc"]
+    gone = np.setdiff1d(np.concatenate([a, b]), found.to_numpy())
+    if strict and (has_null or len(gone)):
+        raise _seed_error(([None] if has_null else []) + gone.tolist())
+    if len(gone):
+        # strict=False: an unseeded endpoint relays no label, so every
+        # edge touching it is dropped — the rounds split there too
+        keep = ~(np.isin(a, gone) | np.isin(b, gone))
+        a, b = a[keep], b[keep]
+    doc, cluster = _component_min(a, b)
+    if not len(doc):
+        return seeds.select("doc", F.col("doc").alias("cluster"))
+    typ = tbl.schema.field("a").type
+    moved = raw.sparkSession.createDataFrame(
+        pa.table({"doc": pa.array(doc, typ), "cluster": pa.array(cluster, typ)})
+    )
+    return seeds.join(F.broadcast(moved), "doc", "left").select(
+        "doc", F.coalesce("cluster", "doc").alias("cluster")
+    )
+
+
+def _component_min(a, b):
+    """(node, component minimum) for every node of the edge list
+    (a[i], b[i]) that is not its component's minimum.
+
+    np.unique indexes the endpoints in sorted order, so index order is
+    id order and labels can be indexes. Each pass hooks the two roots
+    of every edge to the smaller one (np.minimum.at), then jumps
+    pointers until every node points at a root. A pass that changes
+    nothing leaves every edge inside one star, whose root is the
+    component's minimum."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = idx[: len(a)], idx[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        ra, rb = lab[ea], lab[eb]
+        lo = np.minimum(ra, rb)
+        new = lab.copy()
+        np.minimum.at(new, ra, lo)
+        np.minimum.at(new, rb, lo)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    moved = np.flatnonzero(lab != np.arange(len(nodes)))
+    return nodes[moved], nodes[lab[moved]]
+
+
+def _cc_rounds(edges, labels, max_iter, _ckpt) -> DataFrame:
+    """connected_components' scale path: path-halving rounds over the
+    mirrored ``edges`` from the seed ``labels`` (doc, label)."""
+
     def _half_round(lbl: DataFrame) -> DataFrame:
         """One min-label + path-halving propagation round over
         (doc, old, label) — `old` (the PROBE-start label) rides through
@@ -1018,7 +1014,6 @@ def simhash_clusters(
     bits: int = 60,
     max_hamming: int = 3,
     checkpoint_dir: str | None = None,
-    algorithm: str = "halving",
 ) -> DataFrame:
     """(doc, cluster) SimHash near-dup labels with an EXACT-CODE
     COLLAPSE before the pair join — the scale path for cluster assembly
@@ -1038,7 +1033,7 @@ def simhash_clusters(
     component-min labels are identical to what the uncollapsed
     simhash_near_pairs + connected_components pipeline produces.
 
-    checkpoint_dir / algorithm pass through to connected_components.
+    checkpoint_dir passes through to connected_components.
     """
     coded = (
         df.where(content_bearing(F.col(text_col)))
@@ -1064,7 +1059,6 @@ def simhash_clusters(
         rep_coded.select("doc"),
         rep_pairs,
         checkpoint_dir=checkpoint_dir,
-        algorithm=algorithm,
     )
     member = coded.join(groups, "code").select("doc", "rep")
     return member.join(

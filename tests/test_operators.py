@@ -4,6 +4,7 @@ similarity, text, multimodal) on small, hand-checkable inputs."""
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -538,25 +539,58 @@ def test_ivf_global_dim_mismatch_fails_loudly(spark):
         assign_clusters(df, cents).collect()
 
 
+@contextmanager
+def _cc_path_conf(spark, path):
+    """Session conf that routes connected_components down ``path``: the
+    session's broadcast threshold takes small graphs to the driver pass,
+    -1 forces the Spark rounds. Restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if path == "rounds":
+        spark.conf.set(key, "-1")
+    try:
+        yield path
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.fixture(params=["driver", "rounds"])
+def cc_path(request, spark):
+    """Runs a connected_components test on each of its two paths."""
+    with _cc_path_conf(spark, request.param) as path:
+        yield path
+
+
+def _spy_checkpoints(monkeypatch, df_cls) -> list[bool]:
+    """Record the ``eager`` flag of every localCheckpoint call."""
+    calls: list[bool] = []
+    orig = df_cls.localCheckpoint
+
+    def spy(self, eager=True):
+        calls.append(bool(eager))
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+    return calls
+
+
 def test_connected_components_orphan_endpoints_fail_loudly(spark):
     """A pair endpoint absent from the seed ids cannot relay labels, so
     1-5-9 would silently split into {1},{9}: strict mode must raise, and
-    strict=False must label only the seeded subgraph."""
+    strict=False must label only the seeded subgraph — splitting at the
+    unlabeled node the same way on both paths."""
     ids = spark.createDataFrame([(1,), (9,)], "doc long")
     pairs = spark.createDataFrame(
         [(1, 5), (5, 9)], "doc_a long, doc_b long"
     )
-    with pytest.raises(ValueError, match="missing from the seed ids"):
-        D.connected_components(ids, pairs)
-    out = {r.doc: r.cluster for r in
-           D.connected_components(ids, pairs, strict=False).collect()}
-    assert set(out) == {1, 9}  # only the seeded universe is labeled
-    assert out == {1: 1, 9: 9}  # halving SPLITS at the unlabeled node
-    star = {r.doc: r.cluster for r in D.connected_components(
-        ids, pairs, strict=False, algorithm="star").collect()}
-    # star relays THROUGH unlabeled endpoints (documented difference) —
-    # the universe is still only the seeded ids
-    assert star == {1: 1, 9: 1}
+    for path in ("driver", "rounds"):
+        with _cc_path_conf(spark, path):
+            with pytest.raises(ValueError, match="missing from the seed ids"):
+                D.connected_components(ids, pairs)
+            out = {r.doc: r.cluster for r in
+                   D.connected_components(ids, pairs, strict=False).collect()}
+        assert set(out) == {1, 9}, path  # only the seeded universe is labeled
+        assert out == {1: 1, 9: 9}, path  # SPLIT at the unlabeled node
 
 
 def _uf_clusters(n_ids, edges):
@@ -576,15 +610,15 @@ def _uf_clusters(n_ids, edges):
     return {i: find(i) for i in range(n_ids)}
 
 
-@pytest.mark.parametrize("algorithm", ["halving", "star"])
-def test_connected_components_equivalence_on_graph_shapes(spark, algorithm):
-    """Both CC algorithms must produce the identical component-min
-    labeling as a python union-find on a chain, a clique, and a seeded
-    pseudo-random graph (the round-3 verdict's adversarial-shape ask)."""
+def test_connected_components_equivalence_on_graph_shapes(spark, cc_path):
+    """Both CC paths must produce the identical component-min labeling
+    as a python union-find on a chain (its edges in both orientations),
+    a clique, and a seeded pseudo-random graph (the round-3 verdict's
+    adversarial-shape ask)."""
     import random
 
     shapes = {
-        "chain": [(i, i + 1) for i in range(60)],
+        "chain": [(i, i + 1) if i % 2 else (i + 1, i) for i in range(60)],
         "clique": [(a, b) for a in range(12) for b in range(a + 1, 12)],
     }
     rng = random.Random(2187)
@@ -596,99 +630,155 @@ def test_connected_components_equivalence_on_graph_shapes(spark, algorithm):
         ids = spark.createDataFrame([(i,) for i in range(n)], "doc long")
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         got = {r.doc: r.cluster for r in D.connected_components(
-            ids, pairs, algorithm=algorithm).collect()}
-        assert got == _uf_clusters(n, edges), f"{algorithm} on {name}"
+            ids, pairs).collect()}
+        assert got == _uf_clusters(n, edges), f"{cc_path} on {name}"
 
 
-@pytest.mark.parametrize("algorithm", ["halving", "star"])
-def test_connected_components_one_action_per_round(spark, monkeypatch, algorithm):
-    """Driver round-trip fold: each CC round pays exactly ONE action —
-    the per-round localCheckpoint is LAZY (eager=False) and is
-    materialized by the round's own convergence count/aggregation; only
-    the THREE init checkpoints are eager (round 7: the directed pair
-    set is checkpointed BEFORE mirroring — one evaluation of the pair
-    join instead of one per union branch — then the bidirectional edge
-    set and the labels). For a 2-node single-edge graph, halving takes
-    exactly 2 rounds (one that changes node 1's label, one that
-    confirms the fixed point), so the recorded call sequence is
-    [True, True, True, False, False]."""
+def test_connected_components_null_endpoints(spark, cc_path):
+    """A NULL pair endpoint counts as missing from the seed ids: strict
+    raises, strict=False drops its edges (splitting 2 from 3), and a
+    NULL seed id keeps its (NULL, NULL) row."""
+    ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, None)], "doc long")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (3, 4)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="missing from the seed ids"):
+        D.connected_components(ids, pairs)
+    got = sorted(
+        (tuple(r) for r in
+         D.connected_components(ids, pairs, strict=False).collect()),
+        key=str,
+    )
+    assert got == sorted([(1, 1), (2, 1), (3, 3), (4, 3), (None, None)], key=str)
+
+
+def test_connected_components_big_ids_exact(spark, cc_path):
+    """Bigint ids above 2^53 (where float64 rounds neighbours together)
+    keep every label exact on both paths."""
+    base = (1 << 60) + 1
+    nodes = [base + i for i in range(6)]
+    ids = spark.createDataFrame([(i,) for i in nodes], "doc long")
+    pairs = spark.createDataFrame(
+        [(nodes[2], nodes[1]), (nodes[1], nodes[0]), (nodes[4], nodes[5])],
+        "doc_a long, doc_b long",
+    )
+    got = {r.doc: r.cluster for r in D.connected_components(ids, pairs).collect()}
+    assert got == {
+        nodes[0]: nodes[0], nodes[1]: nodes[0], nodes[2]: nodes[0],
+        nodes[3]: nodes[3], nodes[4]: nodes[4], nodes[5]: nodes[4],
+    }
+
+
+def test_connected_components_driver_pass_budget(spark, monkeypatch):
+    """A broadcast-sized graph is solved on the driver: the directed pair
+    set is the only checkpoint (eager — its action observes the row
+    count), there are no round checkpoints or probes, and the whole call
+    starts at most 6 Spark jobs (checkpoint, Arrow collect, endpoint
+    anti-join)."""
+    n = 64
+    ids = spark.createDataFrame([(i,) for i in range(n + 3)], "doc long")
+    edges = [(i, i + 1) for i in range(n - 1)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    calls = _spy_checkpoints(monkeypatch, type(ids))
+    labels, jobs = _jobs_run_by(
+        spark, lambda: D.connected_components(ids, pairs)
+    )
+    assert calls == [True], calls
+    assert jobs <= 6, jobs
+    got = {r.doc: r.cluster for r in labels.collect()}
+    assert got == _uf_clusters(n + 3, edges)
+
+
+def test_connected_components_driver_pass_size_string_threshold(spark, monkeypatch):
+    """spark.sql.autoBroadcastJoinThreshold accepts size strings: '10MB'
+    is read through the session's parsed conf (int('10MB') would raise)
+    and still takes a small graph down the driver pass."""
+    ids = spark.createDataFrame([(i,) for i in range(5)], "doc long")
+    pairs = spark.createDataFrame([(0, 1), (3, 4)], "doc_a long, doc_b long")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    calls = _spy_checkpoints(monkeypatch, type(ids))
+    spark.conf.set(key, "10MB")
+    try:
+        got = {r.doc: r.cluster for r in D.connected_components(ids, pairs).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert calls == [True], calls
+    assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 3}
+
+
+def test_connected_components_driver_pass_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """With checkpoint_dir the pair set is a reliable checkpoint — the
+    only one on the driver pass — and the call returns the right labels
+    without waiting on the row-count observation."""
+    ids = spark.createDataFrame([(i,) for i in range(6)], "doc long")
+    pairs = spark.createDataFrame([(5, 4), (4, 3), (0, 1)], "doc_a long, doc_b long")
+    cls = type(ids)
+    orig = cls.checkpoint
+    calls = []
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "checkpoint", spy)
+    got = {r.doc: r.cluster for r in D.connected_components(
+        ids, pairs, checkpoint_dir=str(tmp_path / "ckpt")).collect()}
+    assert len(calls) == 1
+    assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 3, 5: 3}
+
+
+def test_connected_components_one_action_per_round(spark, monkeypatch):
+    """Driver round-trip fold on the rounds path: each CC round pays
+    exactly ONE action — the per-round localCheckpoint is LAZY
+    (eager=False) and is materialized by the round's own convergence
+    count; only the THREE init checkpoints are eager (round 7: the
+    directed pair set is checkpointed BEFORE mirroring — one evaluation
+    of the pair join instead of one per union branch — then the
+    bidirectional edge set and the labels). For a 2-node single-edge
+    graph, halving takes exactly 2 probes (one that changes node 1's
+    label, one that confirms the fixed point), so the recorded call
+    sequence is [True, True, True, False, False]."""
     ids = spark.createDataFrame([(0,), (1,)], "doc long")
     pairs = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
-    calls: list[bool] = []
-    cls = type(ids)  # patch the concrete class (classic DataFrame)
-    orig = cls.localCheckpoint
-
-    def spy(self, eager=True):
-        calls.append(bool(eager))
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(cls, "localCheckpoint", spy)
-    got = {r.doc: r.cluster for r in D.connected_components(
-        ids, pairs, algorithm=algorithm, strict=False).collect()}
+    calls = _spy_checkpoints(monkeypatch, type(ids))
+    with _cc_path_conf(spark, "rounds"):
+        got = {r.doc: r.cluster for r in D.connected_components(
+            ids, pairs, strict=False).collect()}
     assert got == {0: 0, 1: 0}
     # init raw pairs + mirrored edges + labels: eager
     assert calls[:3] == [True, True, True], calls
     rounds = calls[3:]
     assert rounds and all(e is False for e in rounds), calls
-    if algorithm == "halving":
-        assert len(rounds) == 2, calls  # change probe + confirm probe
+    assert len(rounds) == 2, calls  # change probe + confirm probe
 
 
-@pytest.mark.parametrize("algorithm", ["halving", "star"])
-def test_connected_components_batched_convergence_probes(
-    spark, monkeypatch, algorithm
-):
-    """Driver-action budget on a DEEP graph: each probe runs TWO
-    propagation rounds and pays one action (round 1 pinned via persist +
-    block-locks, round 2 lazily checkpointed and materialized by the
-    probe's own convergence count/signature) — so a graph needing R
-    rounds costs ceil(R/2)+1 probes, not R+1 actions. Convergence is
-    monotone (labels/edges only descend), so probing every other round
-    cannot miss the fixed point. Chain-64 with halving converges in <= 8
-    propagation rounds (min-label + path halving ~ log2 n); one action
-    per round would be >= 8 driver barriers — the probe count asserted
-    here is the halved budget. Lazy localCheckpoint calls ARE the probe
-    count: exactly one per probe, materialized by that probe's single
-    action (the [True, True, False...] pattern test above pins the
-    eager/lazy split)."""
+def test_connected_components_batched_convergence_probes(spark, monkeypatch):
+    """Driver-action budget on a DEEP graph, rounds path: each probe
+    runs TWO propagation rounds and pays one action (round 1 pinned via
+    persist + block-locks, round 2 lazily checkpointed and materialized
+    by the probe's own convergence count) — so a graph needing R rounds
+    costs ceil(R/2)+1 probes, not R+1 actions. Convergence is monotone
+    (labels only descend), so probing every other round cannot miss the
+    fixed point. Chain-64 with halving converges in <= 8 propagation
+    rounds (min-label + path halving ~ log2 n); one action per round
+    would be >= 8 driver barriers — the probe count asserted here is the
+    halved budget. Lazy localCheckpoint calls ARE the probe count:
+    exactly one per probe, materialized by that probe's single action
+    (the [True, True, False...] pattern test above pins the eager/lazy
+    split)."""
     n = 64
     ids = spark.createDataFrame([(i,) for i in range(n)], "doc long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    calls: list[bool] = []
-    cls = type(ids)
-    orig = cls.localCheckpoint
-
-    def spy(self, eager=True):
-        calls.append(bool(eager))
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(cls, "localCheckpoint", spy)
-    got = {r.cluster for r in D.connected_components(
-        ids, pairs, algorithm=algorithm, strict=False).collect()}
+    calls = _spy_checkpoints(monkeypatch, type(ids))
+    with _cc_path_conf(spark, "rounds"):
+        got = {r.cluster for r in D.connected_components(
+            ids, pairs, strict=False).collect()}
     assert got == {0}
     probes = sum(1 for c in calls if not c)
-    # halving: 4 probes measured (8 rounds) vs >= 8 one-per-round
-    # actions; star: diameter-independent O(log^2) rounds, <= 5 probes
-    assert probes <= 5, (algorithm, probes, calls)
-
-
-def test_star_cc_converges_fast_on_long_chain(spark):
-    """Large-star/small-star is the adversarial-diameter fallback: a
-    256-node chain (diameter 255) converges by pointer doubling in
-    exactly log2(256) = 8 outer rounds (measured cluster-count trace:
-    248 -> 240 -> 224 -> 192 -> 128 -> 1). max_iter=9 caps the loop, so
-    a correct result PROVES convergence within 9 rounds — sequential
-    propagation would need 255."""
-    n = 256
-    ids = spark.createDataFrame([(i,) for i in range(n)], "doc long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    got = {r.cluster for r in D.connected_components(
-        ids, pairs, algorithm="star", max_iter=9).collect()}
-    assert got == {0}  # one component, labeled by its minimum
+    assert probes <= 5, (probes, calls)  # 4 measured (8 rounds)
 
 
 def test_ivf_corrupt_leading_file_does_not_fail_preflight(spark, tmp_path):
@@ -1709,3 +1799,39 @@ def test_topk_per_group_equals_single_window(spark):
     # k larger than some groups: still exact
     t2 = topk_per_group(df, ["role"], order, 10**6, n_salts=3)
     assert t2.count() == df.count()
+
+
+def test_fan_out_decides_from_plan_without_jobs(spark, tmp_path):
+    """fan_out reads the partition count from the physical plan: a
+    shuffled input and a broadcast-join output start no Spark job (the
+    old ``df.rdd.getNumPartitions()`` ran every upstream stage), and the
+    repartition decision matches the executed RDD's count for a
+    single-split scan, a post-shuffle frame and a broadcast-join
+    output."""
+    path = str(tmp_path / "scan")
+    spark.range(400).selectExpr("id", "cast(id % 7 as string) AS t") \
+        .coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    tiny = scan.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
+    # a post-shuffle frame of more than parallelism x 1 MB: adaptive
+    # coalescing keeps it at >= parallelism partitions
+    shuffled = (
+        spark.range(0, 200_000, numPartitions=8)
+        .selectExpr("id", "sha2(cast(id AS string), 512) AS t")
+        .groupBy("t").agg(F.count(F.lit(1)).alias("n"))
+    )
+    joined = scan.join(F.broadcast(tiny), "t")
+    p = spark.sparkContext.defaultParallelism
+    for name, df in (("scan", scan), ("shuffled", shuffled), ("bhj", joined)):
+        out, jobs = _jobs_run_by(spark, lambda: D.fan_out(df))
+        if name != "scan":
+            assert jobs == 0, (name, jobs)
+        executed = df.rdd.getNumPartitions()
+        assert (out is not df) == (executed < p), (name, executed, p)
+    assert D.fan_out(scan) is not scan  # one split < parallelism
+    assert D.fan_out(shuffled) is shuffled
+    # the documented difference: a shuffle under parallelism x 1 MB is
+    # coalesced below parallelism at run time (one partition here), but
+    # the plan shows its declared width, so it is not repartitioned
+    out, jobs = _jobs_run_by(spark, lambda: D.fan_out(tiny))
+    assert jobs == 0 and out is tiny
