@@ -96,7 +96,6 @@ def prepare_corpus(
     source_col: str = "source",
     mixing_seed: int = 0,
     quantize_embeddings: bool = False,
-    persist_stages: bool = False,
     ppl_lm=None,
     max_ppl: float | None = None,
     split_spec: dict[str, float] | None = None,
@@ -104,20 +103,23 @@ def prepare_corpus(
 ) -> dict:
     """Run the full preparation flow. NOTE: the near-dedup phase runs
     EAGERLY at call time — this is a pipeline runner, not a plan
-    builder: the SimHash codes are materialized and connected components
-    checkpoints the rep pairs, then labels them on the driver when they
-    fit the broadcast threshold or in Spark rounds when they do not. On
-    a real cluster pass ``checkpoint_dir`` so those checkpoints are
-    reliable checkpoint() (executor-loss-safe) instead of
-    localCheckpoint (see connected_components).
+    builder: the SimHash pair stage's bucket-stats job reads every
+    exact-deduped row, and connected components checkpoints the rep
+    pairs, then labels them on the driver when they fit the broadcast
+    threshold or in Spark rounds when they do not. On a real cluster
+    pass ``checkpoint_dir`` so those checkpoints are reliable
+    checkpoint() (executor-loss-safe) instead of localCheckpoint (see
+    connected_components).
 
     Returns a dict with the per-stage frames, a ``stats`` callable
     returning the attrition funnel, and a ``release`` callable. The
     funnel counts are observed (``DataFrame.observe``) on actions that
     run anyway, so stats() after a full action on ``packed`` runs no
     Spark job:
-    - n_input through n_exact_deduped: the count that materializes the
-      exact-dedup cache, which this call runs itself;
+    - n_input through n_exact_deduped: the SimHash stage's bucket-stats
+      job (``salted_self_pairs`` inside ``simhash_clusters``), which
+      this call runs itself; it fills the exact-dedup pin, and these
+      stages sit below it;
     - n_near_deduped, n_decontaminated (the same value when no
       ``benchmark`` is given), n_sampled: the caller's first action on
       ``packed`` (budget sampling's own per-source pass fills the first
@@ -128,14 +130,12 @@ def prepare_corpus(
       ``limit(1)``), which stats() checks against the rows that entered
       the packing window.
     stats() counts any stage whose observation was not filled that
-    way; with persist_stages these counts read the stage caches. The
-    observed metrics stop packing's window from being pruned, so a bare
-    ``packed.count()`` still computes the bins. ``persist_stages=True``
-    pins every stage frame (MEMORY_AND_DISK, the same level Suite.clean
-    uses), so each stage's plan executes ONCE no matter how many
-    downstream consumers (the next stage, user writes, counts) read it.
-    ``release()`` unpersists those pins and this call's own
-    exact/near/paragraph-dedup caches.
+    way. The observed metrics stop packing's window from being pruned,
+    so a bare ``packed.count()`` still computes the bins. The exact,
+    near and paragraph-dedup pins (``_cache_swap``) run no action: the
+    bucket-stats job fills the exact-dedup pin, the caller's first
+    action on ``packed`` the other two. ``release()`` unpersists this
+    call's pins unless a later call replaced them.
 
     Keys: quality_pass (n_url_deduped in stats when ``dedup_url_col``
     is set), exact_deduped, near_deduped (post-semantic-dedup
@@ -175,19 +175,9 @@ def prepare_corpus(
     training window ever mixes splits, and membership survives reruns
     and cluster resizes (the eval-contamination guard).
     """
-    persisted: list[DataFrame] = []
     swapped: list[tuple[str, DataFrame]] = []
-    # funnel key -> (observed frame, its observation); the observation
-    # is None for a stage stats() always counts
-    stages: dict[str, tuple[DataFrame, Observation | None]] = {}
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        if persist_stages:
-            from pyspark.storagelevel import StorageLevel
-
-            frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(frame)
-        return frame
+    # funnel key -> (observed frame, its observation)
+    stages: dict[str, tuple[DataFrame, Observation]] = {}
 
     def _swap(key: str, frame: DataFrame) -> DataFrame:
         frame = D._cache_swap(key, frame)
@@ -197,21 +187,16 @@ def prepare_corpus(
     def _stage(key: str, frame: DataFrame) -> DataFrame:
         # a caller's partial action on a returned frame must not be the
         # first to fill an observation: each observed frame is either
-        # run in full inside this call (up to exact dedup) or reaches the
-        # caller only through `packed`, observed above any pin
+        # run in full inside this call (up to exact dedup, by the SimHash
+        # bucket-stats job) or reaches the caller only through `packed`
         obs = Observation()
         frame = _observe(frame, obs)
         stages[key] = (frame, obs)
         return frame
 
     def release() -> None:
-        """Unpersist every stage frame pinned by persist_stages=True and
-        this call's own live caches, unless a later call replaced them."""
-        for frame in persisted:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped
+        """Unpersist this call's own live caches, unless a later call
+        replaced them."""
         for key, frame in swapped:
             D._cache_release(key, frame)
 
@@ -222,10 +207,10 @@ def prepare_corpus(
         docs = remove_boilerplate_lines(
             docs, id_col, text_col, max_occurrences=boilerplate_max_occurrences
         )
-    # every stage up to exact dedup is observed under the count that
-    # materializes the exact-dedup cache, before this call returns;
-    # each funnel stage gets its own count so attrition is attributed
-    # to the right stage (URL dedup BEFORE the domain filter)
+    # every stage up to exact dedup is observed under the SimHash
+    # bucket-stats job that fills the exact-dedup pin, before this call
+    # returns; each funnel stage gets its own count so attrition is
+    # attributed to the right stage (URL dedup BEFORE the domain filter)
     docs = _stage("n_input", docs)
     if dedup_url_col is not None:
         from dataval_spark.operators.urls import url_dedup_key
@@ -234,13 +219,13 @@ def prepare_corpus(
         # (no URL evidence — same contract as the dirty-vector rule).
         # Each such doc gets a per-row key so no-URL docs never collapse
         # into one giant group.
-        docs = _stage("n_url_deduped", _pin(D.dedup_keep_first(
+        docs = _stage("n_url_deduped", D.dedup_keep_first(
             docs, id_col,
             key=F.coalesce(
                 url_dedup_key(F.col(dedup_url_col)),
                 F.concat(F.lit("\x00nourl:"), F.col(id_col).cast("string")),
             ),
-        )))
+        ))
     if (domain_block is not None or domain_allow is not None):
         from dataval_spark.operators.urls import filter_by_domain
 
@@ -249,9 +234,9 @@ def prepare_corpus(
                 "domain_block/domain_allow need dedup_url_col to name "
                 "the URL column"
             )
-        docs = _stage("n_domain_filtered", _pin(filter_by_domain(
+        docs = _stage("n_domain_filtered", filter_by_domain(
             docs, dedup_url_col, block=domain_block, allow=domain_allow
-        )))
+        ))
     tc = X.token_count(F.col(text_col))
     gate = (
         F.col(text_col).isNotNull()
@@ -295,14 +280,11 @@ def prepare_corpus(
         quality_pass = quality_pass.withColumn(
             text_col, X.redact_pii(F.col(text_col))
         )
-    quality_pass = _pin(quality_pass)
 
-    # persist: everything downstream (the simhash cache materialization,
-    # the CC seed checkpoint, the strict orphan check, and the user's
-    # final writes) re-derives this scan + fingerprint-window shuffle
-    # otherwise — several full passes per pipeline run. Bounded by the
-    # same one-live-cache swap as the pair operators; its count fills
-    # the funnel up to here.
+    # pin: everything downstream (the SimHash codes, the keep-canonical
+    # anti-join, and the user's final writes) re-derives this scan +
+    # fingerprint-window shuffle otherwise. Bounded by the same
+    # one-live-cache swap as the pair operators.
     exact_deduped = _swap(
         "prepare_corpus_exact_deduped",
         _stage(
@@ -389,7 +371,6 @@ def prepare_corpus(
         near_deduped = near_deduped.where(
             X.token_count(F.col(text_col)) >= min_tokens
         )
-    near_deduped = _pin(near_deduped)
 
     # from here on the stages are observed on the chain that feeds
     # packing, filled by the caller's first action on `packed`
@@ -408,21 +389,13 @@ def prepare_corpus(
             .union(fuzzy_hits.select(id_col))
             .distinct()
         )
-        decontaminated = _pin(
-            near_deduped.join(contaminated, id_col, "left_anti")
+        decontaminated = near_deduped.join(contaminated, id_col, "left_anti")
+        to_pack = _stage(
+            "n_decontaminated",
+            _stage("n_near_deduped", near_deduped).join(
+                contaminated, id_col, "left_anti"
+            ),
         )
-        if persist_stages:
-            # packing reads the decontaminated pin, whose plan holds
-            # near_deduped's: stats() counts that stage from its cache
-            stages["n_near_deduped"] = (near_deduped, None)
-            to_pack = _stage("n_decontaminated", decontaminated)
-        else:
-            to_pack = _stage(
-                "n_decontaminated",
-                _stage("n_near_deduped", near_deduped).join(
-                    contaminated, id_col, "left_anti"
-                ),
-            )
 
     sized = to_pack.withColumn("n_tok", X.token_count(F.col(text_col)))
 
@@ -445,7 +418,6 @@ def prepare_corpus(
     sampled_frame = sized  # what "sampled"/n_sampled report: the
     # budget-sampled corpus in DOCUMENT rows, before any chunk explode
     if budget_tokens is not None:
-        sampled_frame = _pin(sampled_frame)
         sized = _stage("n_sampled", sampled_frame)
     pack_group = lang_col
     if split_spec is not None:
@@ -505,15 +477,15 @@ def prepare_corpus(
         packed = packed.drop("_pack_order")
     if split_spec is not None:
         packed = packed.drop("_pack_group")
-    packed = _pin(packed)
 
     sc = docs.sparkSession.sparkContext
 
     def stats() -> dict:
         # observed values where an action filled them (see docstring); a
         # count() for the rest, once per distinct stage frame
-        observations = [obs for _, obs in stages.values() if obs is not None]
-        seen = D._filled([*observations, pack_input, packed_rows], sc)
+        seen = D._filled(
+            [*(obs for _, obs in stages.values()), pack_input, packed_rows], sc
+        )
         counts: dict[int, int] = {}
         funnel = {}
         for key, (frame, obs) in stages.items():

@@ -26,6 +26,7 @@ from functools import reduce
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from dataval_spark.operators.text import normalize, token_count, tokens
 
@@ -43,10 +44,14 @@ def content_bearing(text: Column) -> Column:
 # One live cache per (operator, session): the pair-join operators
 # persist a small derived frame (codes / band keys) so the self-join
 # does not re-evaluate the hash expressions per side, but they return a
-# lazy result and so cannot unpersist it themselves. Swapping out the
-# previous call's cache bounds the footprint to one entry per operator
-# per session (an older result frame still held by a caller stays
-# CORRECT — it just recomputes if re-used). Keyed by session so a
+# lazy result and so cannot unpersist it themselves. The pin runs no
+# action: the first action that reads the frame fills it (for the pair
+# operators, salted_self_pairs' bucket-stats job), and the block
+# manager's per-partition locks compute each partition once however
+# many stages of that action read it. Swapping out the previous call's
+# cache bounds the footprint to one entry per operator per session (an
+# older result frame still held by a caller stays CORRECT — it just
+# recomputes if re-used). Keyed by session so a
 # replacement SparkSession never tries to unpersist a stopped one's
 # frame, and the unpersist itself is best-effort for the same reason.
 # Known benign race: concurrent calls to the SAME operator in one
@@ -57,8 +62,6 @@ _live_caches: dict[tuple[str, int], DataFrame] = {}
 
 
 def _cache_swap(key: str, df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     skey = (key, id(df.sparkSession))
     old = _live_caches.get(skey)
     if old is not None:
@@ -68,7 +71,6 @@ def _cache_swap(key: str, df: DataFrame) -> DataFrame:
             pass  # stopped/replaced session: nothing left to unpersist
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _live_caches[skey] = df
-    df.count()  # materialize once, before any self-join fans out
     return df
 
 
@@ -90,10 +92,11 @@ def fan_out(df: DataFrame) -> DataFrame:
 
     The hash-heavy per-row projections in this module (MinHash band
     keys, 60-bit SimHash folds, LSH plane dots) run in the SCAN stage,
-    and a small parquet input arrives as one split
-    (spark.sql.files.maxPartitionBytes) — measured at sf1.0: the whole
-    50k-doc MinHash banding ran in ONE task for 12.7 s while 31 cores
-    idled. At production scale the scan has thousands of splits and this
+    and a small parquet input arrives as one split (Spark's split size
+    is at least spark.sql.files.openCostInBytes, 4 MB, and a row group
+    is read by one split) — measured at sf1.0: the whole 50k-doc
+    MinHash banding ran in ONE task for 12.7 s while 31 cores idled.
+    At production scale the scan has thousands of splits and this
     helper is a no-op (shuffling a corpus of raw text to gain
     parallelism it already has would be pure cost), so the condition is
     the partition count, not the data size. The count is read from the
@@ -172,9 +175,10 @@ def salted_self_pairs(
     (doc_a < doc_b), the bucket key columns, and ``<p>_a``/``<p>_b`` for
     every payload column.
 
-    Adaptive: one cheap aggregation over ``keyed`` (callers pass a
-    cached or cache-derived frame, so this is a sub-second job) measures
-    the max bucket and the total pair volume first. When no bucket is
+    Adaptive: one cheap aggregation over ``keyed`` measures the max
+    bucket and the total pair volume first. Callers pass a pinned or
+    pin-derived frame (_cache_swap), and this job reads every row of it,
+    so it is also the action that fills the pin. When no bucket is
     oversized AND the total volume is small relative to the cluster
     (≤ ~2M pairs per slot), the whole salt/repartition scaffolding is
     skipped and the classic a.id < b.id self-join runs — the scaffolding
@@ -397,8 +401,8 @@ def minhash_candidates(
         .select(F.col(id_col).alias("doc"), bands_arr.alias("bands"))
         .select("doc", "bands", F.posexplode("bands").alias("band_idx", "band_key"))
     )
-    # materialize (doc, band_idx, band_key, bands) before the self-join:
-    # each band key embeds two full tokenize+md5+min passes and both join
+    # pin (doc, band_idx, band_key, bands) under the self-join: each
+    # band key embeds two full tokenize+md5+min passes and both join
     # sides would recompute all of them per doc (same CollapseProject
     # behavior as simhash_near_pairs — measured there at ~10x).
     # ~50 B/doc/band + the bands array, memory+disk, vs re-hashing the
@@ -688,15 +692,14 @@ def simhash_near_pairs(
     coded = fan_out(df).where(content_bearing(F.col(text_col))).select(
         F.col(id_col).alias("doc"), hashed_tokens(F.col(text_col), bits).alias("_ht")
     ).select("doc", simhash_from_hashed(F.col("_ht"), bits).alias("code"))
-    # Materialize (doc, code) ONCE before the self-join: without a
-    # barrier, CollapseProject inlines the simhash expression into every
-    # chunk key and each join side recomputes it (~10 evaluations per
-    # doc — measured 13.4 s vs 1.1 s for the pair stage at sf0.1), and
+    # Pin (doc, code) under the self-join: without a barrier,
+    # CollapseProject inlines the simhash expression into every chunk
+    # key and each join side recomputes it (~10 evaluations per doc —
+    # measured 13.4 s vs 1.1 s for the pair stage at sf0.1), and
     # exchange reuse does not rescue identical join sides here. The
     # cache is 16 B/doc (~16 GB cluster-wide at 10^9 docs, MEMORY_AND_
     # DISK so it spills, LRU-evictable) vs re-hashing the corpus text
-    # 10x. This operator is batch-only, so the eager materialization
-    # action inside _cache_swap is fine.
+    # 10x.
     coded = _cache_swap("simhash_near_pairs", coded)
     return code_near_pairs(coded, bits, max_hamming)
 
@@ -717,20 +720,6 @@ def _filled(observations: list[Observation], sc) -> dict:
         except Py4JError:
             pass  # timed out: count what is still missing
     return {obs: obs.get for obs in observations if done(obs)}
-
-
-def _pin_round(df: DataFrame) -> DataFrame:
-    """Pin an intra-probe intermediate (MEMORY_AND_DISK). Every later
-    reference resolves to the SAME InMemoryRelation, and the block
-    manager's per-partition compute locks (getOrElseUpdate) guarantee
-    each partition is computed ONCE even when several downstream stages
-    of the one probe job consume it — the property that lets a probe
-    materialize TWO propagation rounds with a single driver action
-    without re-deriving round 1 per consumer. Disk-backed, so a huge
-    label/edge frame degrades to spill, not OOM."""
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def connected_components(
@@ -984,10 +973,11 @@ def _cc_rounds(edges, labels, max_iter, _ckpt) -> DataFrame:
         )
 
     # TWO propagation rounds per driver action: round 1's output is
-    # pinned (persist + block-locks — computed once however many round-2
-    # stages consume it), round 2 is lazily checkpointed, and the
-    # probe's changed-count is the ONLY action, materializing the
-    # checkpoint blocks the next probe reads. Convergence is monotone
+    # pinned (MEMORY_AND_DISK, so a huge label frame spills, not OOMs;
+    # the block manager's per-partition locks compute it once however
+    # many round-2 stages consume it), round 2 is lazily checkpointed,
+    # and the probe's changed-count is the ONLY action, materializing
+    # the checkpoint blocks the next probe reads. Convergence is monotone
     # (labels only ever decrease), so probing every other round cannot
     # miss the fixed point — changed==0 across a probe means both of its
     # rounds were no-ops. Halves the per-round driver barrier that
@@ -997,7 +987,7 @@ def _cc_rounds(edges, labels, max_iter, _ckpt) -> DataFrame:
         start = labels.select(
             "doc", F.col("label").alias("old"), F.col("label").alias("label")
         )
-        r1 = _pin_round(_half_round(start))
+        r1 = _half_round(start).persist(StorageLevel.MEMORY_AND_DISK)
         halved = _ckpt(_half_round(r1), eager_needed=False)
         changed = halved.where(F.col("label") != F.col("old")).count()
         r1.unpersist()

@@ -231,12 +231,11 @@ def cosine_near_dup_pairs(
     only (id, id, sim) rows, i.e. the candidate volume the operator
     already pays for.
 
-    The exploded (doc, v, key) frame is materialized once (_cache_swap,
-    the same barrier as the simhash/minhash pair joins): without it both
-    self-join sides re-run the n_tables x n_planes interpreted-HOF
-    bucket dot products per row. Cache cost is the vector itself times
-    n_tables (dim x 8 B x T per doc, memory+disk) — size T accordingly
-    at corpus scale."""
+    The exploded (doc, v, key) frame is not cached: it is read once, by
+    the grouped ``applyInPandas`` scorer, so the bucket keys are
+    computed once per row. The shuffle carries the vector itself times
+    n_tables (dim x 8 B x T per doc) — size T accordingly at corpus
+    scale."""
     if n_tables < 1 or n_planes < 1:
         raise ValueError(
             f"n_tables and n_planes must be >= 1, got {n_tables}/{n_planes}"

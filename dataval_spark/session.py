@@ -37,19 +37,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Scan-split size (guide §6). The LOCAL default is small: driver
-        # testdata ships one parquet file per table, and at the default
-        # 128 MB the biggest table (lineitem, ~126 MB, 6 row groups)
-        # decodes in ONE task while the other cores idle — 16 MB splits
-        # it across its row groups. Parameterised, not a constant: a
-        # production deployment scanning many-file tables sets
-        # SPARK_GRAFT_MAX_PARTITION_BYTES to 128m-1g (bigger splits cut
-        # task-scheduling overhead and the map count feeding shuffles;
-        # split count is bounded below by row-group granularity anyway).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
         # 16g, not bigger: with a huge heap G1's young-gen sizing collapses
         # at high thread counts (measured: identical 17M-row suite run,
         # 48g heap -> 98s at local[32]; 16g heap -> 14s). The engine's

@@ -585,7 +585,14 @@ def streaming_sequence_verdicts(stream, allowed_transitions=None, latency_bounds
     ``allowed_transitions`` the stream must carry ``role`` and verdicts
     include InvalidTransition along the contiguous prefix; with
     ``latency_bounds=(min_s, max_s)`` they include InvalidLatency under
-    the same predecessor-known contract."""
+    the same predecessor-known contract.
+
+    The state times out on processing time (idle conversations are
+    evicted), so Spark schedules a no-data micro-batch after every batch
+    and a query started with ``trigger(availableNow=True)`` never
+    terminates on its own: ``awaitTermination()`` without a timeout and
+    ``processAllAvailable()`` both block forever. Wait until
+    ``recentProgress`` shows the input's batch, then ``stop()`` it."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     with_roles = allowed_transitions is not None

@@ -323,10 +323,12 @@ class Suite:
         # and the report's sort.
         return flagged.groupBy(self.part_expr(flagged).alias("part")).agg(*aggs)
 
-    def clean(self, df: DataFrame, persist: bool = False) -> tuple[DataFrame, DataFrame]:
+    def clean(
+        self, df: DataFrame, persist: bool = False
+    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
         """The reference's cleanup mutation
         (/root/reference/dataval/cleanup.py:48 — UPDATE nulling bad rows)
-        re-expressed immutably: returns ``(cleaned, quarantine)``.
+        re-expressed immutably: returns ``(cleaned, quarantine, flagged)``.
         ``cleaned`` keeps only approved rows with the original schema —
         the input for the corrected validation stage (compare with
         manifest.compare_runs); ``quarantine`` carries the rejected rows
@@ -338,7 +340,7 @@ class Suite:
         returned as the third element so the caller can unpersist THAT
         frame when done — a session-wide catalog.clearCache() here would
         evict every cached DataFrame of library embedders sharing the
-        session. Returns ``(cleaned, quarantine, flagged_or_None)``."""
+        session. Without ``persist`` the third element is None."""
         flagged = self.flag_rows(
             self.enrich(self.project(df, keep_extra=tuple(df.columns)))
         )

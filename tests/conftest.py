@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,3 +23,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def no_streaming_query_left_running():
+    """Fail a test that leaves a streaming query active (the session is
+    shared, so a running query would keep scheduling batches through
+    every later test), and stop the queries it left."""
+    yield
+    s = SparkSession.getActiveSession()
+    left = s.streams.active if s is not None else []
+    for q in left:
+        q.stop()
+    if left:
+        pytest.fail(
+            "streaming queries left active: "
+            + ", ".join(str(q.name or q.id) for q in left)
+        )

@@ -1080,13 +1080,33 @@ def test_prepare_corpus_stats_observed(spark, tmp_path):
     partial = prepare_corpus(docs, **kw)
     assert len(partial["packed"].limit(1).collect()) == 1
     assert partial["stats"]() == want
-
-    # packing reads the decontaminated pin; near_deduped is counted
-    pinned = prepare_corpus(docs, persist_stages=True, **kw)
-    pinned["packed"].write.mode("overwrite").parquet(str(tmp_path / "pinned"))
-    assert pinned["stats"]() == want
-    for out in (written, unread, partial, pinned):
+    for out in (written, unread, partial):
         out["release"]()
+
+
+def test_cache_swap_pins_lazily(spark):
+    """_cache_swap starts no Spark job: the first action that reads the
+    pinned frame fills the cache, and _cache_release drops it."""
+    from dataval_spark.operators.dedup import _cache_release, _cache_swap
+
+    sc = spark.sparkContext
+
+    def cached_rdds() -> set:
+        rdds = sc._jsc.getPersistentRDDs()
+        return {k for k in rdds.keys() if rdds[k].name() is not None}
+
+    df = spark.range(0, 1000, numPartitions=4).selectExpr("id", "id % 7 AS k")
+    before = cached_rdds()
+    pinned, jobs = _jobs_run_by(spark, lambda: _cache_swap("lazy_pin_probe", df))
+    assert jobs == 0
+    assert pinned.storageLevel.useMemory
+    assert cached_rdds() == before  # nothing filled yet
+    assert pinned.groupBy("k").count().count() == 7
+    filled = cached_rdds() - before
+    assert len(filled) == 1
+    _cache_release("lazy_pin_probe", pinned)
+    assert not pinned.storageLevel.useMemory
+    assert not (cached_rdds() & filled)
 
 
 def test_prepare_corpus_release_unpersists_own_caches(spark):
@@ -1112,12 +1132,15 @@ def test_prepare_corpus_release_unpersists_own_caches(spark):
         return sum(1 for rdd in rdds if rdd.name() is not None)
 
     # the SimHash operator's own live caches swap one for one from the
-    # second call on
+    # second call on; the near and paragraph-dedup pins are filled by
+    # the first action on `packed`
     prepare_corpus(docs, **kw)["release"]()
     before = cached_frames()
     first = prepare_corpus(docs, **kw)
+    first["packed"].collect()
     assert cached_frames() == before + 3
     second = prepare_corpus(docs, **kw)
+    second["packed"].collect()
     first["release"]()  # its entries were already replaced by second's
     assert second["exact_deduped"].storageLevel.useMemory
     assert cached_frames() == before + 3
@@ -1379,47 +1402,6 @@ def test_prepare_corpus_web_stages(spark):
     # the boilerplate line (3 occurrences > max 2) is gone from survivors
     assert all("Accept cookies" not in t for t in kept.values())
     assert kept[1].startswith("alpha")
-
-
-def test_prepare_corpus_persist_stages_single_pass(spark):
-    """persist_stages=True pins every stage frame, so each consumer of a
-    stage frame (the next stage, a user write, a stats() count of a
-    stage no action has observed yet) reads its cache instead of
-    re-deriving the whole upstream chain. Funnel values are identical
-    either way; the stage frames must resolve to InMemoryTableScan with
-    no upstream Exchange in the executed plan."""
-    from pyspark.sql import functions as F
-
-    from dataval_spark.operators.corpus import prepare_corpus
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    rows = [
-        (1, base + " one", "en"),
-        (2, base + " one", "en"),  # exact dup
-        (3, "short", "en"),        # fails gate
-        (4, base + " completely different continuation of words", "en"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    plain = prepare_corpus(docs, min_tokens=5)
-    pinned = prepare_corpus(docs, min_tokens=5, persist_stages=True)
-    try:
-        assert pinned["stats"]() == plain["stats"]()
-        for key in ("quality_pass", "near_deduped", "decontaminated", "packed"):
-            frame = pinned[key]
-            assert frame.storageLevel.useMemory, key
-            # a fresh consumer of the stage frame plans straight out of
-            # the cache: the chain (scan, window, CC joins) is gone
-            plan = (
-                frame.select(F.count(F.lit(1)))
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-            assert "InMemoryTableScan" in plan, (key, plan)
-    finally:
-        pinned["release"]()
-    assert not pinned["decontaminated"].storageLevel.useMemory  # released
 
 
 def test_prepare_corpus_quantized_semantic_stage(spark):

@@ -5,6 +5,8 @@ combined transitions+latency state, and a real availableNow run."""
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -210,7 +212,14 @@ def test_streaming_latency_available_now(spark, tmp_path):
         .start()
     )
     try:
-        q.awaitTermination(120)
+        # processing-time state timeouts keep an availableNow query
+        # scheduling no-data batches: it never terminates on its own,
+        # and processAllAvailable() never returns. Wait for the batch
+        # that read the input rows (its sink write precedes its progress)
+        deadline = time.monotonic() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < 5:
+            assert q.isActive and time.monotonic() < deadline
+            time.sleep(0.2)
         got = {
             (r.conv_id, r.turn_idx): r.dataval
             for r in spark.sql("SELECT * FROM lat_out").collect()

@@ -5,6 +5,8 @@ a real availableNow streaming run."""
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -198,10 +200,20 @@ def test_streaming_end_to_end(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    got = {
-        r.turn_idx: r.dataval
-        for r in spark.sql("SELECT * FROM trn_verdicts").collect()
-    }
+    try:
+        # processing-time state timeouts keep an availableNow query
+        # scheduling no-data batches: it never terminates on its own,
+        # and processAllAvailable() never returns. Wait for the batch
+        # that read the input rows (its sink write precedes its progress)
+        deadline = time.monotonic() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < 3:
+            assert q.isActive and time.monotonic() < deadline
+            time.sleep(0.2)
+        got = {
+            r.turn_idx: r.dataval
+            for r in spark.sql("SELECT * FROM trn_verdicts").collect()
+        }
+    finally:
+        q.stop()
     assert got[2] & _TRN == _TRN
     assert got[1] & _TRN == 0
