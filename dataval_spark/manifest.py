@@ -10,10 +10,14 @@ each partition group is validated, one manifest row
 ``(run_id, suite_hash, part, n_rows, n_approved, passed, metrics_json)``
 is appended. A resumed run with the same (run_id, suite_hash) skips
 partitions already present; a different suite_hash for the same run_id is
-rejected (settings guard). Storage is partitioned Parquet — the TableIO
-seam (sources/tableio.py) swaps in an Iceberg catalog when the runtime jar
-is on the classpath, giving snapshot-atomic appends; with plain Parquet we
-keep appends atomic per-file and idempotent by keying on (run_id, part).
+rejected (settings guard).
+
+Storage is a directory of Parquet files, one per commit. A commit is a
+few hundred bytes of metadata, so the driver writes it itself, with no
+Spark job (Delta Lake's log records, VLDB 2020): pyarrow builds the file,
+the Hadoop FileSystem writes it under a ``_``-prefixed temp name that no
+reader lists, and a rename publishes it. A crash mid-commit leaves
+nothing visible, and every commit is one whole file (``_commit_rows``).
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from __future__ import annotations
 import hashlib
 import json
 import time
+import uuid
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +38,69 @@ MANIFEST_SCHEMA = (
     "n_approved long, n_rejected long, passed boolean, metrics_json string, "
     "input_fp string, committed_at double"
 )
+
+
+@lru_cache(maxsize=1)
+def _arrow_schema():
+    """MANIFEST_SCHEMA as the Arrow schema of driver-written files (needs
+    a live session: Spark parses the DDL)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(MANIFEST_SCHEMA))
+
+
+def _manifest_row(
+    run_id: str, shash: str, m: dict, input_fp: str = "", metrics: dict | None = None
+) -> dict:
+    """One manifest row from a partition-metrics dict ``m``; its scalar
+    entries are the row's metrics_json unless ``metrics`` is given."""
+    if metrics is None:
+        metrics = {k: v for k, v in m.items() if isinstance(v, (int, float, bool, str))}
+    return {
+        "run_id": run_id,
+        "suite_hash": shash,
+        "part": int(m["part"]),
+        "n_rows": int(m["n_rows"]),
+        "n_approved": int(m["n_approved"]),
+        "n_rejected": int(m["n_rejected"]),
+        "passed": bool(m["passed"]),
+        "metrics_json": json.dumps(metrics, default=str),
+        "input_fp": input_fp,
+        "committed_at": time.time(),
+    }
+
+
+def _commit_rows(
+    spark: SparkSession, manifest_path: str, rows: list[dict], name: str | None = None
+) -> None:
+    """Commit ``rows`` to the manifest as ONE parquet file written from
+    the driver — no Spark job. The bytes go through the Hadoop
+    FileSystem (s3a://, hdfs:// and local alike) to a ``_tmp_`` name,
+    which neither Spark nor pyarrow lists, then a rename publishes them
+    as ``part-<uuid>.parquet``. ``name`` fixes the file name instead: an
+    existing file of that name is deleted, then the new one renamed in,
+    so re-committing under the same name replaces its rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=_arrow_schema()), buf)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = manifest_path.rstrip("/")
+    fs = Path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    tmp = Path(f"{root}/_tmp_{uuid.uuid4().hex}.parquet")
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
+    dest = Path(f"{root}/{name or f'part-{uuid.uuid4().hex}.parquet'}")
+    if name:
+        fs.delete(dest, False)
+    if not fs.rename(tmp, dest):
+        fs.delete(tmp, False)
+        raise IOError(f"could not commit manifest file {dest}")
 
 
 def input_fingerprints(spark: SparkSession, input_path: str, part_col: str) -> dict[int, str]:
@@ -120,10 +189,10 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
     swallowed error here would silently disable resume AND the
     settings guard."""
     try:
-        # recursiveFileLookup: batch runs append flat files; the
-        # streaming writer overwrites per-batch SUBDIRECTORIES
-        # (batch_<id>/) so re-executed micro-batches replace rather than
-        # re-append their rows — one read path covers both layouts
+        # recursiveFileLookup: commits are flat files, but streaming
+        # writers before the driver-side commit wrote per-batch
+        # SUBDIRECTORIES (run_<key>_batch_<id>/) — one read path covers
+        # both layouts
         return (
             spark.read.schema(MANIFEST_SCHEMA)
             .option("recursiveFileLookup", "true")
@@ -149,14 +218,27 @@ def completed_parts(
     m = read_manifest(spark, path)
     if m is None:
         return set()
-    mine = m.where(F.col("run_id") == run_id)
-    hashes = [r.suite_hash for r in mine.select("suite_hash").distinct().collect()]
-    if hashes and any(h != shash for h in hashes):
+    rows = (
+        m.where(F.col("run_id") == run_id)
+        .select("suite_hash", "part", "input_fp")
+        .distinct()
+        .collect()
+    )
+    return _done_parts(rows, path, run_id, shash, fps)
+
+
+def _done_parts(
+    rows: list, path: str, run_id: str, shash: str, fps: dict[int, str] | None = None
+) -> set[int]:
+    """completed_parts over ``run_id``'s collected manifest rows (fields
+    suite_hash, part and, with ``fps``, input_fp): the settings guard,
+    then the done set."""
+    hashes = sorted({r.suite_hash for r in rows})
+    if any(h != shash for h in hashes):
         raise ValueError(
             f"manifest {path} run_id={run_id} was written by a different suite "
             f"(suite_hash {hashes} != {shash}) — refusing to mix results"
         )
-    rows = mine.select("part", "input_fp").distinct().collect()
     if not fps:
         return {r.part for r in rows}
     return {
@@ -524,6 +606,63 @@ def anomaly_scan(
     )
 
 
+def _validate(
+    df: DataFrame,
+    suite: Suite,
+    run_id: str,
+    shash: str,
+    done: set[int],
+    verdicts_path: str | None,
+    fps: dict[int, str] | None = None,
+) -> tuple[ValidationResult, list[dict]] | None:
+    """The validation core of run_resumable and
+    validate_snapshot_increments: validate the partitions of ``df`` not
+    in ``done`` and write their verdicts, but commit NO manifest rows —
+    they are returned for the caller to commit last. None when nothing
+    is left to validate."""
+    dt = dict(df.dtypes).get(suite.part_col, "")
+    if dt not in ("int", "bigint", "smallint", "tinyint"):
+        # the manifest schema stores part as int; a string part column
+        # must be mapped to an integer key upstream — fail loudly here
+        # instead of deep inside int(m["part"])
+        raise ValueError(
+            f"manifest runs require an integer partition column; "
+            f"{suite.part_col!r} is {dt!r}"
+        )
+    if done:
+        # NULL-safe: the resume filter compares the SAME key the suite
+        # aggregates on (part_expr: NULL -> quarantine sentinel) — a bare
+        # ~isin evaluates to NULL for NULL part and silently drops the
+        # quarantine rows from re-validation
+        df = df.where(~suite.part_expr(df).isin(*done))
+        if df.limit(1).count() == 0:
+            return None
+
+    # persist the flagged frame when verdicts are also written: the
+    # metrics collect and the verdicts write would otherwise each pay the
+    # full scan + window shuffle
+    result = suite.run(df, persist=bool(verdicts_path))
+    if not result.partition_metrics:
+        result.unpersist()
+        return None
+    if verdicts_path:
+        # dynamic partition overwrite: ONLY the partitions present in
+        # this result are replaced. A re-validated partition (changed
+        # input) would otherwise append a second copy of its verdicts;
+        # untouched partitions' files are never rewritten, so resumes
+        # stay incremental. (row_verdicts exposes the canonical "part".)
+        result.row_verdicts.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("part").parquet(verdicts_path)
+    result.unpersist()  # verdicts written; drop the cached flagged frame
+    fps = fps or {}
+    rows = [
+        _manifest_row(run_id, shash, m, fps.get(int(m["part"]), ""))
+        for m in result.partition_metrics
+    ]
+    return result, rows
+
+
 def run_resumable(
     spark: SparkSession,
     df: DataFrame,
@@ -542,68 +681,19 @@ def run_resumable(
     marked done (the re-run appends a fresh manifest row with the new
     fingerprint; consumers key on the current input_fp).
     """
-    dt = dict(df.dtypes).get(suite.part_col, "")
-    if dt not in ("int", "bigint", "smallint", "tinyint"):
-        # the manifest schema stores part as int; a string part column
-        # must be mapped to an integer key upstream — fail loudly here
-        # instead of deep inside int(m["part"])
-        raise ValueError(
-            f"run_resumable requires an integer partition column; "
-            f"{suite.part_col!r} is {dt!r}"
-        )
     shash = suite_hash(suite)
     fps = input_fingerprints(spark, input_path, suite.part_col) if input_path else {}
     done = completed_parts(spark, manifest_path, run_id, shash, fps)
-    if done:
-        # NULL-safe: the resume filter compares the SAME key the suite
-        # aggregates on (part_expr: NULL -> quarantine sentinel) — a bare
-        # ~isin evaluates to NULL for NULL part and silently drops the
-        # quarantine rows from re-validation
-        df = df.where(~suite.part_expr(df).isin(*done))
-        if df.limit(1).count() == 0:
-            return None
-
-    # persist the flagged frame when verdicts are also written: the
-    # metrics collect and the verdicts write would otherwise each pay the
-    # full scan + window shuffle
-    result = suite.run(df, persist=bool(verdicts_path))
-    if not result.partition_metrics:
+    out = _validate(df, suite, run_id, shash, done, verdicts_path, fps)
+    if out is None:
         return None
-
-    rows = [
-        {
-            "run_id": run_id,
-            "suite_hash": shash,
-            "part": int(m["part"]),
-            "n_rows": int(m["n_rows"]),
-            "n_approved": int(m["n_approved"]),
-            "n_rejected": int(m["n_rejected"]),
-            "passed": bool(m["passed"]),
-            "metrics_json": json.dumps(
-                {k: v for k, v in m.items() if isinstance(v, (int, float, bool, str))},
-                default=str,
-            ),
-            "input_fp": fps.get(int(m["part"]), ""),
-            "committed_at": time.time(),
-        }
-        for m in result.partition_metrics
-    ]
-    # COMMIT ORDER: verdicts first, manifest last. The manifest append is
-    # what marks partitions done; writing it first would let a crash
-    # between the two writes permanently skip the verdicts on re-run.
-    if verdicts_path:
-        # dynamic partition overwrite: ONLY the partitions present in
-        # this result are replaced. A re-validated partition (changed
-        # input) would otherwise append a second copy of its verdicts;
-        # untouched partitions' files are never rewritten, so resumes
-        # stay incremental. (row_verdicts exposes the canonical "part".)
-        result.row_verdicts.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("part").parquet(verdicts_path)
-    spark.createDataFrame(rows, schema=MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_path)
-    result.unpersist()  # writes done; drop the cached flagged frame
+    result, rows = out
+    # COMMIT ORDER: verdicts first (written by _validate), manifest last.
+    # The manifest file is what marks partitions done; committing it
+    # first would let a crash between the two writes permanently skip
+    # the verdicts on re-run. The commit is one driver-written file,
+    # published by a rename: all of the run's rows appear, or none.
+    _commit_rows(spark, manifest_path, rows)
     return result
 
 
@@ -633,8 +723,11 @@ def validate_snapshot_increments(
     the manifest as a completion sentinel row
     ``(run_id=f"{run_prefix}-v<N>", part=COMPLETE_PART)``, and each call
 
-    * reads the current version; returns None when the watermark
-      already covers it (nothing to process — idempotent);
+    * reads the manifest ONCE: the watermark, the partitions of this
+      increment already committed, and the settings guard all come from
+      one collect of its rows;
+    * returns None when the watermark already covers the current
+      version (nothing to process — idempotent);
     * first run (or a suite change: the watermark is keyed on
       suite_hash, so a new suite re-validates from scratch) validates
       the FULL current snapshot;
@@ -643,10 +736,11 @@ def validate_snapshot_increments(
     * a range poisoned by delete/merge/overwrite/rollback (or expired
       history) falls back to FULL re-validation of the current
       snapshot: rows changed, so delta verdicts would be unsound;
-    * crash safety: partition rows commit through ``run_resumable``
-      (same run_id => completed partitions are skipped on re-run), and
-      the sentinel commits LAST — a crash before it re-runs the
-      increment, never skips it.
+    * crash safety: verdicts are written first, then the partition rows
+      and the sentinel commit together as ONE manifest file. A crash
+      before that file re-runs the increment, never skips it; partition
+      rows already committed under the increment's run_id without a
+      sentinel (by ``run_resumable``) are skipped on re-run.
 
     ``drift_columns`` (opt-in) adds the continuous DRIFT gate: each
     increment's per-partition distributions are compared against the
@@ -674,27 +768,32 @@ def validate_snapshot_increments(
     # series (fresh full validation), not trip the settings-consistency
     # guard on a previous suite's run_id
     tag = f"{run_prefix}-{shash[:8]}-v"
-    last: int | None = None
+    run_id = f"{tag}{cur}"
+    # the series' sentinels plus this increment's own rows: everything
+    # the call needs to know from the manifest, in one collect
     m = read_manifest(spark, manifest_path)
-    if m is not None:
-        done = (
-            m.where(
-                (F.col("part") == COMPLETE_PART)
-                & (F.col("suite_hash") == shash)
-                & F.col("run_id").startswith(tag)
-            )
-            .select("run_id")
-            .collect()
+    rows = [] if m is None else (
+        m.where(
+            F.col("run_id").startswith(tag)
+            & ((F.col("part") == COMPLETE_PART) | (F.col("run_id") == run_id))
         )
-        versions = []
-        for r in done:
-            try:
-                versions.append(int(r.run_id[len(tag):]))
-            except ValueError:
-                continue
-        last = max(versions, default=None)
+        .select("run_id", "suite_hash", "part")
+        .collect()
+    )
+    versions = []
+    for r in rows:
+        if r.part != COMPLETE_PART or r.suite_hash != shash:
+            continue
+        try:
+            versions.append(int(r.run_id[len(tag):]))
+        except ValueError:
+            continue
+    last = max(versions, default=None)
     if last is not None and last >= cur:
         return None
+    done = _done_parts(
+        [r for r in rows if r.run_id == run_id], manifest_path, run_id, shash
+    )
 
     mode = "full"
     if last is None:
@@ -706,30 +805,25 @@ def validate_snapshot_increments(
         except IncrementalReadError:
             df = t.read(cur)  # rows changed: delta verdicts unsound
 
-    run_id = f"{tag}{cur}"
-    result = run_resumable(
-        spark, df, suite, manifest_path, run_id, verdicts_path
-    )
+    out = _validate(df, suite, run_id, shash, done, verdicts_path)
+    result, part_rows = out or (None, [])
     metrics = result.partition_metrics if result is not None else []
-    sentinel = [
+    sentinel = _manifest_row(
+        run_id,
+        shash,
         {
-            "run_id": run_id,
-            "suite_hash": shash,
             "part": COMPLETE_PART,
-            "n_rows": int(sum(m_["n_rows"] for m_ in metrics)),
-            "n_approved": int(sum(m_["n_approved"] for m_ in metrics)),
-            "n_rejected": int(sum(m_["n_rejected"] for m_ in metrics)),
+            "n_rows": sum(m_["n_rows"] for m_ in metrics),
+            "n_approved": sum(m_["n_approved"] for m_ in metrics),
+            "n_rejected": sum(m_["n_rejected"] for m_ in metrics),
             "passed": all(bool(m_["passed"]) for m_ in metrics),
-            "metrics_json": json.dumps(
-                {"from_version": last, "to_version": cur, "mode": mode}
-            ),
-            "input_fp": f"snapshot:v{cur}",
-            "committed_at": time.time(),
-        }
-    ]
-    spark.createDataFrame(sentinel, schema=MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_path)
+        },
+        input_fp=f"snapshot:v{cur}",
+        metrics={"from_version": last, "to_version": cur, "mode": mode},
+    )
+    # verdicts are already written: the partition rows and the sentinel
+    # land together, last, in one file
+    _commit_rows(spark, manifest_path, part_rows + [sentinel])
     if drift_columns and result is not None:
         from dataval_spark.constraints.version_drift import (
             drift_between_versions,

@@ -1285,29 +1285,33 @@ class SnapshotTable:
             raise ValueError(
                 f"bad incremental range v{from_version}..v{to_version}"
             )
-        out: list[list] = []
-        seen: set[str] = set()
-        prev_rels: set[str] | None = None
-        for v in range(from_version, to_v + 1):
+
+        def snap_at(v: int) -> dict:
             try:
-                snap = self.snapshot(v)
+                return self.snapshot(v)
             except FileNotFoundError as exc:
                 raise IncrementalReadError(
                     f"snapshot v{v} of {self.root} was expired; the range "
                     f"v{from_version}..v{to_v} has no append-only history "
                     "— read the target snapshot in full instead"
                 ) from exc
-            rels = {rel for rel, _ in self.files(snap)}
-            if v == from_version:
-                prev_rels = rels
-                continue
+
+        # an append keeps its parent's manifests and adds one, so the
+        # manifests new in an append hold exactly its files: only those
+        # are read, never the whole snapshot's file list
+        out: list[list] = []
+        prev = set(snap_at(from_version)["manifests"])
+        for v in range(from_version + 1, to_v + 1):
+            snap = snap_at(v)
             op = snap.get("operation")
             if op == "append":
-                added = rels - prev_rels
-                for e in self.files(snap):
-                    if e[0] in added and e[0] not in seen:
-                        seen.add(e[0])
-                        out.append(e)
+                for name in snap["manifests"]:
+                    if name not in prev:
+                        out.extend(
+                            json.loads(
+                                self._read_text(f"{self._meta_dir()}/{name}")
+                            )["files"]
+                        )
             elif op not in ("compact", "schema"):
                 # "schema" (rename/drop/widen DDL) is metadata-only:
                 # rows are untouched, so the range stays an append-only
@@ -1319,7 +1323,7 @@ class SnapshotTable:
                     f"v{from_version}..v{to_v} is not an append-only "
                     "changelog; read the target snapshot in full instead"
                 )
-            prev_rels = rels
+            prev = set(snap["manifests"])
         return out
 
     def incremental_read(

@@ -55,14 +55,15 @@ def stream_to_manifest(
     validated exactly once across restarts (asserted in
     tests/test_streaming.py); manifest rows are idempotent under
     micro-batch RE-execution too (crash after the write, before the
-    checkpoint commit): each batch overwrites its own
-    run_<key>_batch_<id>/ subdir, so even sum-style manifest consumers
-    never double-count. RESUME CONTRACT: restarting a crashed stream
-    means the SAME run_id with the SAME checkpoint_dir — run_id is part
-    of the overwrite key (so concurrent/later runs with fresh
-    checkpoints never clobber each other's rows), which also means a
-    restart under a NEW run_id is a new run whose re-executed batches
-    coexist with the old run's rows rather than replacing them.
+    checkpoint commit): each batch commits one manifest file named
+    run_<key>_batch_<id>.parquet and a replay replaces it, so even
+    sum-style manifest consumers never double-count. RESUME CONTRACT:
+    restarting a crashed stream means the SAME run_id with the SAME
+    checkpoint_dir — run_id is part of the file name (so
+    concurrent/later runs with fresh checkpoints never clobber each
+    other's rows), which also means a restart under a NEW run_id is a
+    new run whose re-executed batches coexist with the old run's rows
+    rather than replacing them.
 
     Returns the started StreamingQuery; caller owns awaitTermination/stop.
     """
@@ -98,12 +99,12 @@ def manifest_batch_writer(
     between the write and the checkpoint commit, and the writer must be
     idempotent under that re-invocation."""
     import hashlib
-    import json as _json
-    import time as _time
 
-    from dataval_spark.manifest import MANIFEST_SCHEMA, suite_hash
+    from dataval_spark.manifest import _commit_rows, _manifest_row, suite_hash
 
     shash = suite_hash(suite)
+    # hashed: run ids contain '/'
+    run_key = hashlib.sha1(run_id.encode()).hexdigest()[:12]
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         dt = dict(batch_df.dtypes).get(suite.part_col, "")
@@ -119,32 +120,13 @@ def manifest_batch_writer(
         if not result.partition_metrics:
             result.unpersist()
             return
-        rows = [
-            {
-                "run_id": f"{run_id}/batch={batch_id}",
-                "suite_hash": shash,
-                "part": int(m["part"]),
-                "n_rows": int(m["n_rows"]),
-                "n_approved": int(m["n_approved"]),
-                "n_rejected": int(m["n_rejected"]),
-                "passed": bool(m["passed"]),
-                "metrics_json": _json.dumps(
-                    {k: v for k, v in m.items() if isinstance(v, (int, float, bool, str))},
-                    default=str,
-                ),
-                "input_fp": "",
-                "committed_at": _time.time(),
-            }
-            for m in result.partition_metrics
-        ]
         spark = batch_df.sparkSession
-        run_key = hashlib.sha1(run_id.encode()).hexdigest()[:12]
         if verdicts_path:
             # (run, batch)-scoped directory, full overwrite: a
             # re-executed micro-batch (crash between this write and the
             # checkpoint commit) REPLACES its own verdicts instead of
             # appending a duplicate copy — idempotent without touching
-            # other batches, and (like the manifest write below) a later
+            # other batches, and (like the manifest file below) a later
             # run whose fresh checkpoint restarts batch ids at 0 never
             # clobbers a previous run's verdicts
             # the scoping level is a key=value dir so the verdicts ROOT
@@ -154,21 +136,25 @@ def manifest_batch_writer(
             result.row_verdicts.write.mode("overwrite").partitionBy("part").parquet(
                 f"{verdicts_path}/run_batch={run_key}_{batch_id}"
             )
-        # (run, batch)-scoped subdir + overwrite (NOT append to the
-        # root): a crash between this write and the checkpoint commit
-        # re-executes the batch on restart, and an append would
-        # double-count n_rows for any consumer that sums manifest rows;
-        # overwrite makes the re-execution replace its own rows. The
-        # run_id is part of the key (hashed — run ids contain '/') so a
-        # LATER streaming run whose fresh checkpoint restarts batch ids
-        # at 0 overwrites its own rows, never a previous run's (multiple
-        # run_ids in one manifest is a supported layout — compare_runs,
-        # baseline_from_manifest). read_manifest reads the root
-        # recursively, so flat batch layouts and these subdirs mix.
-        spark.createDataFrame(rows, schema=MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{manifest_path}/run_{run_key}_batch_{batch_id}")
         result.unpersist()
+        rows = [
+            _manifest_row(f"{run_id}/batch={batch_id}", shash, m)
+            for m in result.partition_metrics
+        ]
+        # one driver-written file named per (run, batch): a crash between
+        # this commit and the checkpoint commit re-executes the batch on
+        # restart, and the re-commit REPLACES the file — an append would
+        # double-count n_rows for any consumer that sums manifest rows.
+        # The run is part of the name, so a LATER streaming run whose
+        # fresh checkpoint restarts batch ids at 0 replaces its own file,
+        # never a previous run's (multiple run_ids in one manifest is a
+        # supported layout — compare_runs, baseline_from_manifest).
+        name = f"run_{run_key}_batch_{batch_id}"
+        # the same batch committed by an older writer, as a directory of
+        # that name, is replaced too
+        legacy = spark._jvm.org.apache.hadoop.fs.Path(f"{manifest_path}/{name}")
+        legacy.getFileSystem(spark._jsc.hadoopConfiguration()).delete(legacy, True)
+        _commit_rows(spark, manifest_path, rows, name=f"{name}.parquet")
 
     return _process
 

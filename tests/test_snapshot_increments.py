@@ -219,3 +219,154 @@ def test_continuous_drift_gate_rides_increments(spark, tmp_path):
         if r.get("drifted") and r["part"] != "*"
     }
     assert flagged == {"0"}
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _row(run_id, part, n_rows=3, committed_at=1.5):
+    return {
+        "run_id": run_id, "suite_hash": "h" * 16, "part": part,
+        "n_rows": n_rows, "n_approved": n_rows - 1, "n_rejected": 1,
+        "passed": part % 2 == 0, "metrics_json": json.dumps({"part": part}),
+        "input_fp": f"fp{part}", "committed_at": committed_at,
+    }
+
+
+def test_commit_rows_starts_no_spark_job(spark, tmp_path):
+    from dataval_spark.manifest import _commit_rows
+
+    mp = str(tmp_path / "manifest")
+    rows = [_row("r", p) for p in range(3)]
+    _, jobs = _jobs_run_by(spark, lambda: _commit_rows(spark, mp, rows))
+    assert jobs == 0
+    assert len(list((tmp_path / "manifest").glob("part-*.parquet"))) == 1
+    assert not list((tmp_path / "manifest").glob("_tmp_*"))
+
+
+def test_commit_rows_round_trip_exact_types(spark, tmp_path):
+    """Driver-written rows read back through read_manifest with the
+    MANIFEST_SCHEMA types, also beside files of the Spark writer the
+    manifest used before (an existing manifest keeps working)."""
+    from dataval_spark.manifest import MANIFEST_SCHEMA, _commit_rows
+
+    mp = str(tmp_path / "manifest")
+    old = [_row("old", p, n_rows=2**40, committed_at=1.25) for p in range(2)]
+    spark.createDataFrame(old, schema=MANIFEST_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(mp)
+    new = [_row("new", p, n_rows=2**33 + p, committed_at=1e9 + 0.5) for p in (-2, 0, 7)]
+    _commit_rows(spark, mp, new)
+
+    m = read_manifest(spark, mp)
+    assert dict(m.dtypes) == {
+        "run_id": "string", "suite_hash": "string", "part": "int",
+        "n_rows": "bigint", "n_approved": "bigint", "n_rejected": "bigint",
+        "passed": "boolean", "metrics_json": "string", "input_fp": "string",
+        "committed_at": "double",
+    }
+    got = sorted((r.asDict() for r in m.collect()), key=lambda r: (r["run_id"], r["part"]))
+    want = sorted(old + new, key=lambda r: (r["run_id"], r["part"]))
+    assert got == want
+    for r in got:
+        assert type(r["part"]) is int and type(r["committed_at"]) is float
+    # the driver-written file's own physical types match the Spark writer's
+    import pyarrow.parquet as pq
+
+    [f] = [
+        f for f in (tmp_path / "manifest").glob("part-*.parquet")
+        if not f.name.endswith(".snappy.parquet")  # the Spark writer's
+    ]
+    assert pq.read_schema(f).field("part").type == "int32"
+    assert pq.read_schema(f).field("n_rows").type == "int64"
+    # and pyarrow reads the mixed directory as one dataset
+    assert pq.read_table(mp).num_rows == len(old) + len(new)
+
+
+def _next_batch(spark, t, seed):
+    b = transcripts(spark, n_convs=15, seed=seed, n_parts=2)
+    t.append(b, partition_by=["part"])
+    return b.count()
+
+
+def test_leftover_tmp_file_invisible_to_resume(spark, tmp_path):
+    """A commit that crashed before its rename leaves a _tmp_ file: no
+    reader sees it, so it neither marks the increment done nor shows up
+    in read_manifest."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataval_spark.manifest import _arrow_schema
+
+    table = str(tmp_path / "tbl")
+    mp = str(tmp_path / "manifest")
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+    _next_batch(spark, t, 3)
+    validate_snapshot_increments(spark, table, suite, mp)
+    n_before = read_manifest(spark, mp).count()
+
+    # the crashed commit of v1: its partition rows and sentinel
+    tag = f"snap-{suite_hash(suite)[:8]}-v"
+    crashed = [
+        {**_row(f"{tag}1", p), "suite_hash": suite_hash(suite)}
+        for p in (0, 1, COMPLETE_PART)
+    ]
+    pq.write_table(
+        pa.Table.from_pylist(crashed, schema=_arrow_schema()),
+        str(tmp_path / "manifest" / "_tmp_crashed.parquet"),
+    )
+    assert read_manifest(spark, mp).count() == n_before
+
+    n2 = _next_batch(spark, t, 9)
+    r = validate_snapshot_increments(spark, table, suite, mp)
+    assert r is not None and r.summary()["n_rows"] == n2
+    assert _sentinels(spark, mp)[-1][1]["mode"] == "delta"
+
+
+def test_delta_reads_manifest_once_and_commits_one_file(spark, tmp_path, monkeypatch):
+    """A delta call reads the manifest once and commits one file that
+    holds the increment's partition rows and its sentinel."""
+    import pyarrow.parquet as pq
+
+    from dataval_spark import manifest as manifest_mod
+
+    table = str(tmp_path / "tbl")
+    mp = str(tmp_path / "manifest")
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+    _next_batch(spark, t, 3)
+    validate_snapshot_increments(spark, table, suite, mp)
+    n2 = _next_batch(spark, t, 9)
+
+    calls = []
+    real = manifest_mod.read_manifest
+
+    def counting(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(manifest_mod, "read_manifest", counting)
+    before = set((tmp_path / "manifest").glob("*.parquet"))
+    r = validate_snapshot_increments(spark, table, suite, mp)
+    added = set((tmp_path / "manifest").glob("*.parquet")) - before
+    assert len(calls) == 1
+    assert len(added) == 1
+    rows = pq.read_table(added.pop()).to_pylist()
+    assert {row["run_id"] for row in rows} == {f"snap-{suite_hash(suite)[:8]}-v1"}
+    assert sorted(row["part"] for row in rows) == [COMPLETE_PART, 0, 1]
+    parts = [row for row in rows if row["part"] != COMPLETE_PART]
+    assert sum(row["n_rows"] for row in parts) == n2 == r.summary()["n_rows"]

@@ -602,6 +602,27 @@ def test_incremental_read_appends_only(spark, tmp_path):
     assert t.incremental_read(v0).schema == t.read().schema
 
 
+def test_incremental_read_opens_only_added_manifests(spark, tmp_path, monkeypatch):
+    """A one-version delta of a 10-append table reads the one manifest
+    that append added, not the file lists of whole snapshots."""
+    import re
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for k in range(10):
+        t.append(_df(spark, 10 * k, 10 * k + 10).coalesce(1), partition_by=["part"])
+    read = []
+    real = t._read_text
+
+    def counting(path):
+        read.append(path)
+        return real(path)
+
+    monkeypatch.setattr(t, "_read_text", counting)
+    delta = t.incremental_read(8, 9)
+    assert len([p for p in read if re.search(r"/m_[0-9a-f]+\.json$", p)]) == 1
+    assert sorted(r.id for r in delta.collect()) == list(range(90, 100))
+
+
 def test_incremental_read_refuses_row_changes(spark, tmp_path):
     """delete/merge/overwrite/rollback in the range break the
     append-only changelog -> IncrementalReadError; ranges before the
