@@ -185,7 +185,10 @@ def salted_self_pairs(
     costs ~2-3 s of extra jobs/tasks per call (measured on the
     32k-template rep-pair stage of prepare_corpus), which would tax
     every SMALL pair stage to protect against a skew they don't have.
-    Both paths produce the identical pair set."""
+    Both paths produce the identical pair set. Rows with a NULL id are
+    dropped first: they pair with nothing on the fast path, while on the
+    salted path least/greatest skip NULL and would emit (x, x)."""
+    keyed = keyed.where(F.col(id_col).isNotNull())
     cnt = F.count(F.lit(1)).alias("_bn")
     sizes_all = keyed.groupBy(*key_cols).agg(cnt)
     stats = sizes_all.agg(
@@ -1177,34 +1180,30 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle.
 
-    explode -> (optional stop-shingle cap) -> self-join on shingle ->
-    count common -> jaccard = common / (|A| + |B| - common).
+    explode -> (optional stop-shingle cap) -> salted_self_pairs on
+    (group,) shingle -> count common -> jaccard = common / (|A| + |B| -
+    common). The per-doc shingle sets are pinned (one row per doc, not
+    per shingle) and filled by the pair primitive's bucket-stats job.
     """
     base = df.select(
         F.col(id_col).alias("doc"),
         *( [F.col(within).alias("grp")] if within else [] ),
         shingles(F.col(text_col), n).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
+    base = _cache_swap("jaccard_pairs", base)
 
-    exploded = base.select("doc", *( ["grp"] if within else [] ), "n_sh", F.explode("sh").alias("shingle"))
+    keys = ["grp", "shingle"] if within else ["shingle"]
+    exploded = base.select("doc", *keys[:-1], "n_sh", F.explode("sh").alias("shingle"))
     if max_shingle_freq:
         freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
         exploded = exploded.join(
             F.broadcast(freq.where(F.col("f") > max_shingle_freq)), "shingle", "left_anti"
         )
-
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc"))
-    if within:
-        cond = cond & (F.col("a.grp") == F.col("b.grp"))
     common = (
-        a.join(b, cond)
+        salted_self_pairs(exploded, keys, payload_cols=("n_sh",))
         .groupBy(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
+            "doc_a", "doc_b",
+            F.col("n_sh_a").alias("n_a"), F.col("n_sh_b").alias("n_b"),
         )
         .agg(F.count(F.lit(1)).alias("common"))
     )

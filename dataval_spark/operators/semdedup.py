@@ -6,21 +6,24 @@ k-means-cluster the embeddings, compare pairs ONLY within a cluster,
 connect pairs above a cosine threshold into duplicate groups, keep one
 representative per group. This module composes operators the engine
 already ships — `ivf.train_centroids` / `ivf.build_index` (Lloyd
-k-means with a deterministic hash seed), the cached-norm cosine pair
-join from `similarity`, and `dedup.connected_components` +
-`dedup.keep_cluster_canonical` — into that pipeline.
+k-means with a deterministic hash seed), the per-bucket numpy cosine
+scorer of `similarity.cosine_near_dup_pairs`, and
+`dedup.connected_components` + `dedup.keep_cluster_canonical` — into
+that pipeline.
 
 Scale design:
 - Candidate volume is sum(c_i^2) over cluster sizes c_i, so k is the
   knob: SemDeDup uses k ~ sqrt(N) (the paper runs k=50k on LAION-440M).
   For clusters that are still too big, ``sub_planes`` adds a sign-plane
-  sub-bucket to the join key (cluster, bucket) — identical vectors
+  sub-bucket to the scoring key (cluster, bucket) — identical vectors
   always share a bucket, so exact duplicates are never lost; near-dups
   keep the 1-(theta/pi)^p per-plane retention described in
   `similarity.cosine_near_dup_pairs`.
-- The pair join is ONE equi-join on the cluster key over a frame
-  materialized once with per-row norms cached (the pair volume, not the
-  row count, is the cost center).
+- Pairs are scored per key group in numpy: each (cluster[, bucket])
+  group crosses the Arrow boundary once as rows with their norms, and
+  its in-group dot products are vectorized (the pair volume, not the
+  row count, is the cost center). The scorer reads its input once, so
+  nothing is cached.
 - Connected components run over pair ENDPOINTS only (distinct ids that
   appear in some pair), not the whole corpus — singleton docs never
   enter the label-propagation loop.
@@ -41,13 +44,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataval_spark.operators.dedup import (
-    _cache_swap,
-    connected_components,
-    keep_cluster_canonical,
-)
+from dataval_spark.operators.dedup import connected_components, keep_cluster_canonical
 from dataval_spark.operators.ivf import build_index, train_centroids
-from dataval_spark.operators.similarity import dot, lsh_bucket, norm, vector_ok
+from dataval_spark.operators.similarity import (
+    _bucket_cosine_pairs, _vec, dot, lsh_bucket, norm, vector_ok,
+)
 
 __all__ = ["SemanticDedupResult", "within_cluster_pairs", "semantic_dedup"]
 
@@ -73,42 +74,18 @@ def within_cluster_pairs(
     threshold. ``indexed`` is `ivf.build_index` output (or any frame
     with an int cluster column); cluster -1 (dirty/unassignable) rows
     are excluded up front."""
-    base = (
-        indexed.where(
-            (F.col(cluster_col) >= 0) & vector_ok(F.col(vec_col), dim)
-        )
-        .select(
-            F.col(id_col).alias("doc"),
-            F.col(vec_col).alias("v"),
-            F.col(cluster_col).alias("ck"),
-            norm(F.col(vec_col)).alias("nv"),
-        )
-        .where(F.col("nv") > 0)
-    )
+    keys = {"ck": F.col(cluster_col)}
     if sub_planes > 0:
-        base = base.withColumn(
-            "ck",
-            F.struct(
-                F.col("ck"), lsh_bucket(F.col("v"), dim, sub_planes).alias("bkt")
-            ),
-        )
-    coded = _cache_swap("semdedup_pairs", base)
-    a, b = coded.alias("a"), coded.alias("b")
-    sim = F.round(
-        F.try_divide(
-            dot(F.col("a.v"), F.col("b.v")), F.col("a.nv") * F.col("b.nv")
-        ),
-        4,
+        keys["bkt"] = lsh_bucket(F.col(vec_col), dim, sub_planes)
+    base = indexed.where(
+        (F.col(cluster_col) >= 0) & vector_ok(F.col(vec_col), dim)
+    ).select(
+        F.col(id_col).alias("doc"),
+        _vec(F.col(vec_col)).alias("v"),
+        norm(F.col(vec_col)).alias("nv"),
+        *[c.alias(k) for k, c in keys.items()],
     )
-    return (
-        a.join(b, (F.col("a.ck") == F.col("b.ck")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            sim.alias("sim"),
-        )
-        .where(F.col("sim") >= threshold)
-    )
+    return _bucket_cosine_pairs(base.where(F.col("nv") > 0), list(keys), threshold)
 
 
 def _centroid_sims(

@@ -8,10 +8,12 @@
   touches only same-bucket rows, turning the crossJoin into an equi-join.
 * embedding-cosine near-dup — same-bucket pairs above a cosine threshold.
 
-No Python UDFs: dot products are F.zip_with + F.aggregate (whole-stage
-codegen). Hyperplane weights are deterministic and dependency-free
-(table 0: sin((i+1)*(j+1)); further tables: md5-derived — see plane()),
-and python is the single source inlined into the DuckDB oracles.
+Top-k dot products are F.zip_with + F.aggregate (whole-stage codegen);
+near-dup pairs are scored per bucket in numpy (``_bucket_cosine_pairs``,
+shared with SemDeDup). Hyperplane weights are deterministic and
+dependency-free (table 0: sin((i+1)*(j+1)); further tables: md5-derived
+— see plane()), and python is the single source inlined into the DuckDB
+oracles.
 """
 
 from __future__ import annotations
@@ -210,6 +212,86 @@ def lsh_topk(
     )
 
 
+def _bucket_cosine_pairs(
+    coded: DataFrame, key_cols: list[str], threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, sim), doc_a < doc_b, for the pairs of ``coded`` rows
+    (``doc``, ``v`` array<double>, ``nv`` its norm > 0) that share
+    ``key_cols`` and whose 4-decimal cosine is >= ``threshold``; a pair
+    sharing several keys is emitted once per key.
+
+    Per-bucket pair scoring in numpy (guide §4.2), not a per-pair JVM
+    HOF fold: the self-join form paid an interpreted zip_with+aggregate
+    dot product PER CANDIDATE PAIR (~15 µs each; at sf1.0 that is
+    2.5·10⁷ pairs → 381 s). Here each key group crosses the Arrow
+    boundary once (rows, not pairs), read once (callers need not cache
+    it), and all in-group pair dots are produced by dim vectorized
+    outer-product accumulations.
+
+    Numeric parity is exact, not approximate: S starts at 0.0 and adds
+    V[:,d]·Vᵀ[d,:] for d = 0..dim-1 in index order, so each pair's dot is
+    the same left-to-right IEEE-double chain ((0+x₀y₀)+x₁y₁)+… the JVM
+    aggregate and the DuckDB list_sum twin evaluate (numpy's elementwise
+    multiply/add are single IEEE ops — no FMA, no reassociation). Python
+    only PRE-FILTERS with a conservative margin below the rounded
+    threshold; the returned sim is re-derived in the JVM from the raw dot
+    with the exact original round(try_divide(...)) expression, so emitted
+    rows are bit-identical to the join form.
+
+    NULL ids pair with nothing and are dropped first: a group holding
+    one cannot be sorted (string ids) and comes into pandas as float64
+    (bigint ids, inexact above 2^53). A whole group is one pandas frame
+    in one Python worker, so a hot key must fit there."""
+    import pandas as pd  # local: keep module import light
+
+    coded = coded.where(F.col("doc").isNotNull())
+    id_type = coded.schema["doc"].dataType.simpleString()
+    out_schema = f"doc_a {id_type}, doc_b {id_type}, dot double, na double, nb double"
+    # everything at or above `cut` COULD round (HALF_UP) to >= threshold
+    # at 4 decimals; the extra 1e-9 covers the pre-filter's own division
+    # rounding (the authoritative comparison happens JVM-side)
+    cut = threshold - 0.00005 - 1e-9
+
+    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
+
+        ids = pdf["doc"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        V = np.asarray(np.stack(pdf["v"].to_numpy()[order]), dtype=np.float64)
+        nv = pdf["nv"].to_numpy()[order]
+        n = len(ids)
+        rows, cols, dots = [np.empty(0, int)], [np.empty(0, int)], [np.empty(0)]
+        # row-blocked so the (blk × n) product matrix stays ~32 MB even
+        # for a pathologically hot bucket
+        blk = max(1, int(4_000_000 // n))
+        for s in range(0, n - 1, blk):
+            e = min(s + blk, n)
+            S = np.zeros((e - s, n))
+            for d in range(V.shape[1]):
+                S += np.multiply.outer(V[s:e, d], V[:, d])
+            # strict id inequality, not index: duplicate ids never pair
+            # (the join form's a.doc < b.doc)
+            mask = (S / np.multiply.outer(nv[s:e], nv) >= cut) & (
+                ids[None, :] > ids[s:e, None]
+            )
+            ai, bj = np.nonzero(mask)
+            rows.append(ai + s)
+            cols.append(bj)
+            dots.append(S[ai, bj])
+        i, j = np.concatenate(rows), np.concatenate(cols)
+        return pd.DataFrame(
+            {"doc_a": ids[i], "doc_b": ids[j], "dot": np.concatenate(dots),
+             "na": nv[i], "nb": nv[j]}
+        )
+
+    cand = coded.groupBy(*key_cols).applyInPandas(_score, out_schema)
+    sim = F.round(F.try_divide(F.col("dot"), F.col("na") * F.col("nb")), 4)
+    return cand.select("doc_a", "doc_b", sim.alias("sim")).where(
+        F.col("sim") >= threshold
+    )
+
+
 def cosine_near_dup_pairs(
     df: DataFrame, dim: int, threshold: float = 0.95,
     id_col: str = "vec_id", vec_col: str = "embedding", n_planes: int = 4,
@@ -226,16 +308,16 @@ def cosine_near_dup_pairs(
     production runs set ``n_tables`` > 1: independent plane families
     (disjoint via the table offset in ``plane``), a pair is a candidate
     if it collides in ANY table — recall 1-(1-p)^T — and the final
-    distinct collapses pairs that collide in several. The join stays one
-    equi-join on the exploded (table, bucket) key; the distinct shuffles
+    distinct collapses pairs that collide in several. Each row is
+    exploded once per table to its (table, bucket) key and every key
+    group is scored by ``_bucket_cosine_pairs``; the distinct shuffles
     only (id, id, sim) rows, i.e. the candidate volume the operator
     already pays for.
 
-    The exploded (doc, v, key) frame is not cached: it is read once, by
-    the grouped ``applyInPandas`` scorer, so the bucket keys are
-    computed once per row. The shuffle carries the vector itself times
-    n_tables (dim x 8 B x T per doc) — size T accordingly at corpus
-    scale."""
+    The exploded (doc, v, key) frame is not cached: the grouped scorer
+    reads it once, so the bucket keys are computed once per row. The
+    shuffle carries the vector itself times n_tables (dim x 8 B x T per
+    doc) — size T accordingly at corpus scale."""
     if n_tables < 1 or n_planes < 1:
         raise ValueError(
             f"n_tables and n_planes must be >= 1, got {n_tables}/{n_planes}"
@@ -264,7 +346,7 @@ def cosine_near_dup_pairs(
             F.col(id_col).alias("doc"),
             # double up front: the JVM dot/norm always folded over
             # array<double> (see _vec) and float→double is exact, so the
-            # Arrow batches below carry the identical values
+            # Arrow batches carry the identical values
             _vec(F.col(vec_col)).alias("v"),
             # norm once per row: computed per candidate pair it would
             # re-run the 64-element fold 2x per pair (the pair volume is
@@ -276,90 +358,5 @@ def cosine_near_dup_pairs(
     coded = base.select(
         "doc", "v", "nv", F.explode(keys).alias("k")
     ).select("doc", "v", "nv", F.col("k.tbl").alias("tbl"), F.col("k.bkt").alias("bkt"))
-
-    # Per-bucket pair scoring in numpy (guide §4.2), not a per-pair JVM
-    # HOF fold: the self-join form paid an interpreted zip_with+aggregate
-    # dot product PER CANDIDATE PAIR (~15 µs each; at sf1.0 that is
-    # 2.5·10⁷ pairs → 381 s). Here each (table, bucket) group crosses the
-    # Arrow boundary once (rows, not pairs) and all in-bucket pair dots
-    # are produced by dim vectorized outer-product accumulations.
-    #
-    # Numeric parity is exact, not approximate: S starts at 0.0 and adds
-    # V[:,d]·Vᵀ[d,:] for d = 0..dim-1 in index order, so each pair's dot
-    # is the same left-to-right IEEE-double chain ((0+x₀y₀)+x₁y₁)+… the
-    # JVM aggregate and the DuckDB list_sum twin evaluate (numpy's
-    # elementwise multiply/add are single IEEE ops — no FMA, no
-    # reassociation). Python only PRE-FILTERS with a conservative margin
-    # below the rounded threshold; the returned sim is re-derived in the
-    # JVM from the raw dot with the exact original round(try_divide(...))
-    # expression, so emitted rows are bit-identical to the join form.
-    import pandas as pd  # local: keep module import light
-
-    id_field = next(f for f in coded.schema.fields if f.name == "doc")
-    out_schema = (
-        f"doc_a {id_field.dataType.simpleString()}, "
-        f"doc_b {id_field.dataType.simpleString()}, "
-        "dot double, na double, nb double"
-    )
-    # everything at or above `cut` COULD round (HALF_UP) to >= threshold
-    # at 4 decimals; the extra 1e-9 covers the pre-filter's own division
-    # rounding (the authoritative comparison happens JVM-side)
-    cut = threshold - 0.00005 - 1e-9
-
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        empty = {
-            "doc_a": pdf["doc"].iloc[:0],
-            "doc_b": pdf["doc"].iloc[:0],
-            "dot": np.empty(0),
-            "na": np.empty(0),
-            "nb": np.empty(0),
-        }
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(empty)
-        ids = pdf["doc"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        V = np.asarray(np.stack(pdf["v"].to_numpy()[order]), dtype=np.float64)
-        nv = pdf["nv"].to_numpy()[order]
-        out_a, out_b, out_dot, out_na, out_nb = [], [], [], [], []
-        # row-blocked so the (blk × n) product matrix stays ~32 MB even
-        # for a pathologically hot bucket
-        blk = max(1, int(4_000_000 // n))
-        for s in range(0, n - 1, blk):
-            e = min(s + blk, n)
-            S = np.zeros((e - s, n))
-            for d in range(V.shape[1]):
-                S += np.multiply.outer(V[s:e, d], V[:, d])
-            sims = S / np.multiply.outer(nv[s:e], nv)
-            mask = sims >= cut
-            # strict id inequality, not index: duplicate ids never pair
-            # (the join form's a.doc < b.doc)
-            mask &= ids[None, :] > ids[s:e, None]
-            ai, bj = np.nonzero(mask)
-            if len(ai):
-                out_a.append(ids[ai + s])
-                out_b.append(ids[bj])
-                out_dot.append(S[ai, bj])
-                out_na.append(nv[ai + s])
-                out_nb.append(nv[bj])
-        if not out_a:
-            return pd.DataFrame(empty)
-        return pd.DataFrame(
-            {
-                "doc_a": np.concatenate(out_a),
-                "doc_b": np.concatenate(out_b),
-                "dot": np.concatenate(out_dot),
-                "na": np.concatenate(out_na),
-                "nb": np.concatenate(out_nb),
-            }
-        )
-
-    cand = coded.groupBy("tbl", "bkt").applyInPandas(_score, out_schema)
-    sim = F.round(F.try_divide(F.col("dot"), F.col("na") * F.col("nb")), 4)
-    pairs = cand.select("doc_a", "doc_b", sim.alias("sim")).where(
-        F.col("sim") >= threshold
-    )
+    pairs = _bucket_cosine_pairs(coded, ["tbl", "bkt"], threshold)
     return pairs.distinct() if n_tables > 1 else pairs

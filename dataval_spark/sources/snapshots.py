@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -179,6 +180,28 @@ class SnapshotTable:
             out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
+
+    def _publish(self, path: str, text: str) -> bool:
+        """Create ``path`` holding ``text`` unless a file is there; True
+        iff this call created it. Written to a ``_tmp_`` file, then
+        published by link(2) on ``file:`` (atomic EEXIST: Hadoop's local
+        rename checks, then renames, so two racers can both win) and by
+        the FileSystem's fail-if-exists rename elsewhere."""
+        self._fs.mkdirs(self._Path(self._meta_dir()))
+        tmp = self._Path(f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json")
+        self._write_text(tmp.toString(), text)
+        dest = self._Path(path)
+        if self._fs.getUri().getScheme() != "file":
+            ok = bool(self._fs.rename(tmp, dest))
+        else:
+            local = [self._fs.makeQualified(p).toUri().getPath() for p in (tmp, dest)]
+            try:
+                os.link(*local)
+                ok = True
+            except FileExistsError:
+                ok = False
+        self._fs.delete(tmp, False)  # via the FileSystem: its .crc goes too
+        return ok
 
     def _read_text(self, path: str) -> str:
         ins = self._fs.open(self._Path(path))
@@ -611,8 +634,8 @@ class SnapshotTable:
         return files
 
     def _try_commit(self, version: int, snap: dict) -> bool:
-        """Atomic compare-and-swap: rename fails iff v<version>.json
-        exists (or a racer renamed first) — the loser retries.
+        """Atomic compare-and-swap: the publish fails iff v<version>.json
+        exists (or a racer published first) — the loser retries.
 
         Stamps ``committed_at`` (epoch seconds) if absent — the ONE
         place every commit funnels through. Derived commits that copy a
@@ -625,13 +648,7 @@ class SnapshotTable:
 
         if "committed_at" not in snap:
             snap = {**snap, "committed_at": round(_time.time(), 3)}
-        self._fs.mkdirs(self._Path(self._meta_dir()))
-        tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps(snap, sort_keys=True))
-        ok = bool(self._fs.rename(self._Path(tmp), self._Path(self._vpath(version))))
-        if not ok:
-            self._fs.delete(self._Path(tmp), False)
-        return ok
+        return self._publish(self._vpath(version), json.dumps(snap, sort_keys=True))
 
     def _schema_fields(self, df: DataFrame) -> list:
         return sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)
@@ -1969,7 +1986,7 @@ class SnapshotTable:
         """Pin a snapshot under an immutable name — "the corpus release
         2026-08" — readable forever via ``read(version=tag_version(n))``
         and PROTECTED from ``expire_snapshots``. Write-once: the tag
-        file is committed with the same fail-if-exists rename CAS as a
+        file is committed with the same fail-if-exists publish as a
         snapshot, so two racers cannot tag the same name differently.
         Returns the pinned version. (Iceberg's tag refs; branches are
         deliberately out of scope — every mutation here is a linear
@@ -1980,11 +1997,8 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
         self.snapshot(v)  # must exist (and not be expired)
-        tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps({"version": v}))
-        dest = self._Path(f"{self._meta_dir()}/tag_{name}.json")
-        if not self._fs.rename(self._Path(tmp), dest):
-            self._fs.delete(self._Path(tmp), False)
+        dest = f"{self._meta_dir()}/tag_{name}.json"
+        if not self._publish(dest, json.dumps({"version": v})):
             raise ValueError(
                 f"tag {name!r} already exists on {self.root} "
                 f"(tags are immutable; points at v{self.tag_version(name)})"
@@ -2044,10 +2058,8 @@ class SnapshotTable:
         if base is None:
             raise ValueError("cannot branch an empty table")
         self.snapshot(base)  # must exist (expired/never-committed raises)
-        tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps({"name": name, "base": base}))
-        if not self._fs.rename(self._Path(tmp), self._Path(self._branch_marker(name))):
-            self._fs.delete(self._Path(tmp), False)
+        marker = json.dumps({"name": name, "base": base})
+        if not self._publish(self._branch_marker(name), marker):
             raise ValueError(f"branch {name!r} already exists on {self.root}")
         return base
 

@@ -58,27 +58,62 @@ def test_expiry_never_drops_tagged_versions(spark, tmp_path):
         t.drop_tag("pinned")  # already gone
 
 
-def test_tag_race_single_winner(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.append(_df(spark, 0, 3))
-    t.append(_df(spark, 3, 6))
+def _winners(publish, args) -> int:
+    """Start publish(arg) for each arg on its own thread, released
+    together by a barrier; count the calls that won (neither raised
+    ValueError nor returned False)."""
     import threading
 
-    errs = []
+    gate, won = threading.Barrier(len(args)), []
 
-    def _try(v):
+    def _go(a):
+        gate.wait()
         try:
-            t.tag("r", version=v)
-        except ValueError as e:
-            errs.append(e)
+            won.append(publish(a) is not False)
+        except ValueError:
+            won.append(False)
 
-    th = [threading.Thread(target=_try, args=(v,)) for v in (0, 1)]
+    th = [threading.Thread(target=_go, args=(a,)) for a in args]
     for x in th:
         x.start()
     for x in th:
         x.join()
-    assert len(errs) == 1  # exactly one racer lost the CAS
-    assert t.tag_version("r") in (0, 1)
+    return sum(won)
+
+
+RACES = 150
+
+
+def test_tag_race_single_winner(spark, tmp_path):
+    """Two threads tag the same name at once: exactly one wins, every
+    time. The races are metadata only (no Spark job), so a check-then-
+    rename publish that lets both win shows up within the loop."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 3))
+    t.append(_df(spark, 3, 6))
+    won = [
+        _winners(lambda v, i=i: t.tag(f"r{i}", version=v), (0, 1))
+        for i in range(RACES)
+    ]
+    assert won == [1] * RACES  # exactly one racer won each CAS
+    assert set(t.tags().values()) <= {0, 1} and len(t.tags()) == RACES
+
+
+@pytest.mark.parametrize("what", ["branch", "commit"])
+def test_publish_race_single_winner(spark, tmp_path, what):
+    """The same single-winner publish guards branch creation and the
+    snapshot commit slot."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, 0, 3))
+    t.append(_df(spark, 3, 6))
+
+    def publish(i, k):
+        if what == "branch":
+            return t.create_branch(f"b{i}", k)
+        return t._try_commit(100 + i, {"racer": k})
+
+    won = [_winners(lambda k, i=i: publish(i, k), (0, 1)) for i in range(RACES)]
+    assert won == [1] * RACES
 
 
 def test_cli_tag_faces(spark, tmp_path, capsys):
