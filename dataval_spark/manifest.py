@@ -614,6 +614,7 @@ def _validate(
     done: set[int],
     verdicts_path: str | None,
     fps: dict[int, str] | None = None,
+    dynamic: bool = True,
 ) -> tuple[ValidationResult, list[dict]] | None:
     """The validation core of run_resumable and
     validate_snapshot_increments: validate the partitions of ``df`` not
@@ -646,14 +647,18 @@ def _validate(
         result.unpersist()
         return None
     if verdicts_path:
-        # dynamic partition overwrite: ONLY the partitions present in
-        # this result are replaced. A re-validated partition (changed
-        # input) would otherwise append a second copy of its verdicts;
-        # untouched partitions' files are never rewritten, so resumes
-        # stay incremental. (row_verdicts exposes the canonical "part".)
-        result.row_verdicts.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("part").parquet(verdicts_path)
+        # clustered by part: each part lands in one file per write task.
+        # ``dynamic`` partition overwrite replaces ONLY the parts in this
+        # result (run_resumable: a re-validated part would otherwise
+        # append a second copy of its verdicts, and untouched parts are
+        # never rewritten, so resumes stay incremental). Otherwise the
+        # directory is replaced whole: validate_snapshot_increments gives
+        # each increment its own. (row_verdicts exposes the canonical
+        # "part".)
+        w = result.row_verdicts.hint("rebalance", "part").write.mode("overwrite")
+        if dynamic:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy("part").parquet(verdicts_path)
     result.unpersist()  # verdicts written; drop the cached flagged frame
     fps = fps or {}
     rows = [
@@ -742,6 +747,16 @@ def validate_snapshot_increments(
       rows already committed under the increment's run_id without a
       sentinel (by ``run_resumable``) are skipped on re-run.
 
+    ``verdicts_path`` receives the row verdicts as one hive-readable
+    dataset partitioned by ``from_version`` and ``part``: each increment
+    writes ``from_version=<watermark it starts from>/part=K``, and a full
+    pass (first run, suite change, poisoned range) ``from_version=-1``.
+    A delta ADDS its directory, so the verdict rows always equal the
+    rows validated so far; a replayed increment starts from the same
+    watermark and replaces only its own directory. A full pass deletes
+    the whole verdict set first, including parts that are no longer in
+    the table.
+
     ``drift_columns`` (opt-in) adds the continuous DRIFT gate: each
     increment's per-partition distributions are compared against the
     last-validated version via ``drift_between_versions`` on
@@ -805,7 +820,20 @@ def validate_snapshot_increments(
         except IncrementalReadError:
             df = t.read(cur)  # rows changed: delta verdicts unsound
 
-    out = _validate(df, suite, run_id, shash, done, verdicts_path)
+    # each increment's verdicts live in their own directory, named by the
+    # watermark the increment starts from: a replay after a crash before
+    # the manifest commit starts from the same watermark, whatever the
+    # table's version by then, and overwrites that directory whole. A
+    # full pass clears the whole set first, even when it validates no
+    # rows (an emptied table).
+    scope = None
+    if verdicts_path:
+        scope = f"{verdicts_path}/from_version={last if mode == 'delta' else -1}"
+        if mode == "full":
+            Path = spark._jvm.org.apache.hadoop.fs.Path
+            root = Path(verdicts_path)
+            root.getFileSystem(spark._jsc.hadoopConfiguration()).delete(root, True)
+    out = _validate(df, suite, run_id, shash, done, scope, dynamic=False)
     result, part_rows = out or (None, [])
     metrics = result.partition_metrics if result is not None else []
     sentinel = _manifest_row(

@@ -480,6 +480,22 @@ class SnapshotTable:
             seg.split("=", 1)[0] for seg in rel.split("/")[:-1] if "=" in seg
         )
 
+    def _snap_layouts(self, snap: dict) -> set[tuple[str, ...]]:
+        """The snapshot's set of hive layouts: its recorded ``layouts``
+        field, else (snapshots committed before the field existed) read
+        off its file list. The record is what keeps a commit's layout
+        guard constant in table history."""
+        rec = snap.get("layouts")
+        if rec is not None:
+            return {tuple(lay) for lay in rec}
+        return self._layouts_of(self.files(snap))
+
+    @classmethod
+    def _layouts_of(cls, entries: list[list]) -> set[tuple[str, ...]]:
+        """The hive layouts of a file list (recorded in the snapshot as
+        the sorted list of lists, ``sorted(map(list, layouts))``)."""
+        return {cls._entry_layout(rel) for rel, _ in entries}
+
     def _layout_partition_cols(self, snap: dict) -> list[str] | None:
         """The snapshot's uniform hive partition layout, or None when
         the table is unpartitioned/empty. Every write op defaults its
@@ -488,24 +504,23 @@ class SnapshotTable:
         basePath partition recovery drops the minority layout's rows on
         read — the one failure mode a metadata-tracked table must never
         allow (see the layout guard in the commit paths)."""
-        layouts = {self._entry_layout(rel) for rel, _ in self.files(snap)}
+        layouts = self._snap_layouts(snap)
         if len(layouts) == 1:
             return list(next(iter(layouts))) or None
         return None
 
     def _guard_layout(
         self,
-        entries: list[list],
+        layouts: set[tuple[str, ...]],
         context: str,
         sanctioned: set | None = None,
     ) -> None:
-        """Fail a commit whose final file list mixes hive layouts,
+        """Fail a commit whose final file list's ``layouts`` mix,
         UNLESS every layout present is ``sanctioned`` (already in the
         base snapshot — i.e. an earlier ``evolve_layout=True`` append
         deliberately introduced it). Reads are mixed-layout safe (one
         reader per layout group); the guard exists to catch ACCIDENTAL
         switches, which would otherwise silently fragment the tree."""
-        layouts = {self._entry_layout(rel) for rel, _ in entries}
         if len(layouts) > 1 and not (sanctioned and layouts <= sanctioned):
             raise ValueError(
                 f"{context} would commit a mixed partition layout "
@@ -545,7 +560,7 @@ class SnapshotTable:
 
     # -- write path -------------------------------------------------------
     def _write_data_files(
-        self, df: DataFrame, partition_by: list[str] | None
+        self, df: DataFrame, partition_by: list[str] | None, cluster: bool = True
     ) -> list[list]:
         """Write df's rows as immutable files, uniquely named under the
         shared hive-style data layout (``data/part=K/<commit>-<file>``);
@@ -559,6 +574,14 @@ class SnapshotTable:
         name (partitionBy lifts it out of the data files), and the
         pinned snapshot schema hides it from readers — Iceberg's hidden
         partitioning.
+
+        A partitioned write is first clustered by its directory keys (a
+        ``rebalance`` hint: one exchange, which AQE coalesces for small
+        writes and splits when a key is skewed), so each partition value
+        lands in one file per output task rather than one per input
+        task. ``cluster=False`` keeps df's own distribution: compaction
+        sets its range, z-order or partition distribution itself, and
+        the hint would replace it.
 
         The write lands in a scratch commit dir first (Spark owns that
         layout), then each data file is renamed into place: one cheap
@@ -596,9 +619,10 @@ class SnapshotTable:
             for t in transforms:
                 if not t.is_identity:
                     df = df.withColumn(t.hive_name, t.expr(dtypes[t.source]))
-            w = df.write.mode("error").partitionBy(
-                *[t.hive_name for t in transforms]
-            )
+            keys = [t.hive_name for t in transforms]
+            if cluster:
+                df = df.hint("rebalance", *keys)
+            w = df.write.mode("error").partitionBy(*keys)
         else:
             w = df.write.mode("error")
         cols = set(df.columns)
@@ -699,16 +723,14 @@ class SnapshotTable:
         for _ in range(_MAX_COMMIT_RETRIES):
             cur = self.current_version()
             parent = self.snapshot(cur) if cur is not None else None
+            layouts = self._layouts_of(new_files)
             if base_files and cur is not None:
+                # the parent's recorded layouts stand in for its file
+                # list: the guard reads no manifest, whatever the history
+                parent_layouts = self._snap_layouts(parent)
+                layouts |= parent_layouts
                 if not evolve_layout:
-                    parent_files = self.files(parent)
-                    self._guard_layout(
-                        parent_files + new_files,
-                        operation,
-                        sanctioned={
-                            self._entry_layout(rel) for rel, _ in parent_files
-                        },
-                    )
+                    self._guard_layout(layouts, operation, parent_layouts)
                 parent_fields = sorted(
                     map(tuple, json.loads(parent["schema_fields"]))
                 )
@@ -781,6 +803,7 @@ class SnapshotTable:
                 "schema_fields": json.dumps(fields),
                 "manifests": manifests,
                 "partition_spec": spec,
+                "layouts": sorted(map(list, layouts)),
             }
             blooms = self._resolved_blooms()
             if blooms:
@@ -1384,13 +1407,8 @@ class SnapshotTable:
         # layouts already present in the base snapshot are sanctioned
         # (an earlier evolve_layout append introduced them); only a NEW
         # accidental layout fails the commit
-        self._guard_layout(
-            kept_entries + new_files,
-            operation,
-            sanctioned={
-                self._entry_layout(rel) for rel, _ in self.files(snap)
-            },
-        )
+        layouts = self._layouts_of(kept_entries + new_files)
+        self._guard_layout(layouts, operation, self._snap_layouts(snap))
         stats = {
             rel: all_stats[rel] for rel, _ in kept_entries if rel in all_stats
         }
@@ -1410,6 +1428,7 @@ class SnapshotTable:
             "schema_fields": snap["schema_fields"],
             "manifests": [manifest],
             "partition_spec": self._canonical_specs(partition_by),
+            "layouts": sorted(map(list, layouts)),
         }
         if snap.get("stream_state"):
             new_snap["stream_state"] = snap["stream_state"]
@@ -2447,7 +2466,7 @@ class SnapshotTable:
             )
         else:
             df = df.repartition(n_target)
-        compacted_files = self._write_data_files(df, partition_by)
+        compacted_files = self._write_data_files(df, partition_by, cluster=False)
         new_manifest = self._write_manifest(
             compacted_files, *self._collect_stats(compacted_files)
         )
@@ -2460,6 +2479,7 @@ class SnapshotTable:
             "schema_fields": snap["schema_fields"],
             "manifests": [new_manifest],
             "partition_spec": self._canonical_specs(partition_by),
+            "layouts": sorted(map(list, self._layouts_of(compacted_files))),
         }
         if snap.get("stream_state"):
             new_snap["stream_state"] = snap["stream_state"]

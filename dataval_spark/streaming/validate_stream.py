@@ -132,10 +132,12 @@ def manifest_batch_writer(
             # the scoping level is a key=value dir so the verdicts ROOT
             # stays one hive-readable dataset (run_batch + part become
             # partition columns): a non-key=value level above part=N
-            # dirs breaks partition discovery for root reads
-            result.row_verdicts.write.mode("overwrite").partitionBy("part").parquet(
-                f"{verdicts_path}/run_batch={run_key}_{batch_id}"
-            )
+            # dirs breaks partition discovery for root reads. Clustered
+            # by part: one file per part per output task, not per input
+            # task.
+            result.row_verdicts.hint("rebalance", "part").write.mode(
+                "overwrite"
+            ).partitionBy("part").parquet(f"{verdicts_path}/run_batch={run_key}_{batch_id}")
         result.unpersist()
         rows = [
             _manifest_row(f"{run_id}/batch={batch_id}", shash, m)

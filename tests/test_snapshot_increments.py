@@ -370,3 +370,110 @@ def test_delta_reads_manifest_once_and_commits_one_file(spark, tmp_path, monkeyp
     assert sorted(row["part"] for row in rows) == [COMPLETE_PART, 0, 1]
     parts = [row for row in rows if row["part"] != COMPLETE_PART]
     assert sum(row["n_rows"] for row in parts) == n2 == r.summary()["n_rows"]
+
+
+def _unique_batch(spark, t, k, n_parts=4):
+    """Batch k: clean transcripts whose conv ids no other batch shares."""
+    b = transcripts(spark, n_convs=40, seed=k + 1, n_parts=n_parts, with_defects=False)
+    b = b.withColumn("conv_id", F.concat("conv_id", F.lit(f"-b{k}")))
+    t.append(b, partition_by=["part"])
+
+
+def _verdict_keys(spark, vp):
+    return [(r.conv_id, r.turn_idx) for r in spark.read.parquet(vp).select("conv_id", "turn_idx").collect()]
+
+
+def _assert_verdicts_match_table(spark, t, vp):
+    keys = _verdict_keys(spark, vp)
+    want = sorted((r.conv_id, r.turn_idx) for r in t.read().select("conv_id", "turn_idx").collect())
+    assert len(keys) == len(set(keys))
+    assert sorted(keys) == want
+
+
+def test_delta_verdicts_add_rows(spark, tmp_path):
+    """Each delta adds its verdicts beside the earlier increments': the
+    verdict rows equal the table rows after every call."""
+    table, mp, vp = (str(tmp_path / n) for n in ("tbl", "manifest", "verdicts"))
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+    for k in range(3):
+        _unique_batch(spark, t, k)
+        r = validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+        assert r is not None
+        assert _sentinels(spark, mp)[-1][1]["mode"] == ("full" if k == 0 else "delta")
+        _assert_verdicts_match_table(spark, t, vp)
+    # one directory per increment, named by the watermark it starts
+    # from (-1: the full pass); one file per part in each
+    scopes = sorted(p.name for p in (tmp_path / "verdicts").iterdir())
+    assert scopes == ["from_version=-1", "from_version=0", "from_version=1"]
+    assert len(list((tmp_path / "verdicts").glob("*/part=*/*.parquet"))) == 3 * 4
+
+
+def _crash_commit_once(monkeypatch, call):
+    """Run ``call`` with the manifest commit raising: the verdicts are
+    written, the increment is not recorded."""
+    from dataval_spark import manifest as manifest_mod
+
+    def crash(*a, **k):
+        raise RuntimeError("crashed before the manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(manifest_mod, "_commit_rows", crash)
+        with pytest.raises(RuntimeError, match="crashed"):
+            call()
+
+
+def test_delta_replay_replaces_only_its_own_verdicts(spark, tmp_path, monkeypatch):
+    """Verdicts written, manifest commit lost, then the re-run: at the
+    same version, and after a further append (the replay then covers
+    more versions but starts from the same watermark). Either way the
+    replay replaces the lost attempt's verdicts and keeps the earlier
+    increments'."""
+    table, mp, vp = (str(tmp_path / n) for n in ("tbl", "manifest", "verdicts"))
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+
+    def run():
+        return validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+
+    _unique_batch(spark, t, 0)
+    run()
+    _unique_batch(spark, t, 1)
+    _crash_commit_once(monkeypatch, run)
+    r = run()
+    assert r is not None and _sentinels(spark, mp)[-1][1]["mode"] == "delta"
+    _assert_verdicts_match_table(spark, t, vp)
+
+    _unique_batch(spark, t, 2)
+    _crash_commit_once(monkeypatch, run)
+    _unique_batch(spark, t, 3)
+    r = run()
+    assert r is not None
+    assert _sentinels(spark, mp)[-1][1] == {"from_version": 1, "to_version": 3, "mode": "delta"}
+    _assert_verdicts_match_table(spark, t, vp)
+
+
+def test_full_pass_replaces_the_whole_verdict_set(spark, tmp_path):
+    """A delete poisons the range, and the full pass that follows leaves
+    no verdicts for the deleted rows, a whole deleted part included —
+    and none at all once every row is deleted."""
+    table, mp, vp = (str(tmp_path / n) for n in ("tbl", "manifest", "verdicts"))
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+    _unique_batch(spark, t, 0)
+    validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+    _unique_batch(spark, t, 1)
+    validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+
+    t.delete_where({"part": (3, 3)})
+    assert t.read().where("part = 3").count() == 0
+    r = validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+    assert r is not None and _sentinels(spark, mp)[-1][1]["mode"] == "full"
+    assert spark.read.parquet(vp).where("part = 3").count() == 0
+    _assert_verdicts_match_table(spark, t, vp)
+
+    t.delete_where({"part": (0, 3)})
+    assert t.read().count() == 0
+    assert validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp) is None
+    assert _sentinels(spark, mp)[-1][1]["mode"] == "full"
+    assert not list((tmp_path / "verdicts").rglob("*.parquet"))

@@ -914,3 +914,123 @@ def test_row_count_falls_back_without_recorded_rows(spark, tmp_path):
         t._write_text(f"{meta}/{name}", json.dumps(doc))
     assert t.file_rows(t.snapshot()) == {}
     assert t.row_count() == 30
+
+
+def _data_files(root):
+    import glob
+
+    return glob.glob(f"{root}/data/**/*.parquet", recursive=True)
+
+
+def test_partitioned_append_writes_one_file_per_part(spark, tmp_path):
+    """A partitioned write is clustered by its partition key: a 4-task
+    append to a 4-part table writes 4 data files, not 4 x 4."""
+    root = str(tmp_path / "t")
+    t = SnapshotTable(spark, root)
+    df = spark.range(0, 400).select(
+        "id", (F.col("id") % 4).cast("int").alias("part")
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+    t.append(df, partition_by=["part"])
+    assert len(t.files(t.snapshot())) == len(_data_files(root)) == 4
+    assert sorted(r.id for r in t.read().collect()) == list(range(400))
+
+
+def test_partitioned_sort_compaction_keeps_its_range_distribution(spark, tmp_path):
+    """compact(partition_by, sort_by) keeps its own range distribution
+    (the write path's clustering would replace it): within each part the
+    rewritten files carry disjoint id bounds."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for k in range(4):
+        t.append(
+            spark.range(k, 800, 4).select(
+                "id", (F.col("id") % 2).cast("int").alias("part")
+            ),
+            partition_by=["part"],
+        )
+    rows_before = sorted(r.id for r in t.read().collect())
+    total = sum(s for _, s in t.files(t.snapshot()))
+    v = t.compact(
+        target_file_bytes=max(1, total // 8), partition_by=["part"], sort_by=["id"]
+    )
+    assert v is not None
+    assert sorted(r.id for r in t.read().collect()) == rows_before
+    stats = t.file_stats(t.snapshot())
+    by_part: dict[str, list] = {}
+    for rel, bounds in stats.items():
+        by_part.setdefault(rel.rsplit("/", 1)[0], []).append(tuple(bounds["id"]))
+    assert sorted(by_part) == ["data/part=0", "data/part=1"]
+    for spans in by_part.values():
+        assert len(spans) > 1
+        spans.sort()
+        for (_, hi1), (lo2, _) in zip(spans, spans[1:]):
+            assert hi1 < lo2
+
+
+def test_append_commit_reads_no_parent_manifest(spark, tmp_path, monkeypatch):
+    """The layout guard reads the parent's recorded layouts, not its file
+    list: an append to a 20-commit table opens no parent manifest."""
+    import re
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for k in range(20):
+        t.append(_df(spark, k, k + 1), partition_by=["part"])
+    read = []
+    real = t._read_text
+
+    def counting(path):
+        read.append(path)
+        return real(path)
+
+    monkeypatch.setattr(t, "_read_text", counting)
+    assert t.append(_df(spark, 20, 21)) == 20
+    assert not [p for p in read if re.search(r"/m_[0-9a-f]+\.json$", p)]
+    assert t.snapshot()["layouts"] == [["part"]]
+    # the guard still fires on the record
+    with pytest.raises(ValueError, match="mixed partition layout"):
+        t.append(_df(spark, 21, 22), partition_by=[])
+    assert sorted(r.id for r in t.read().collect()) == list(range(21))
+
+
+def test_layouts_field_carried_by_every_commit_op(spark, tmp_path):
+    """Every commit op records the layouts of its own file list, and a
+    head committed before the field existed falls back to its files."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+
+    def check():
+        snap = t.snapshot()
+        want = sorted(map(list, t._layouts_of(t.files(snap))))
+        assert snap["layouts"] == want, snap["operation"]
+
+    t.append(_df(spark, 0, 10), partition_by=["part"])
+    check()
+    t.append(_df(spark, 10, 20))
+    check()
+    t.append(_df(spark, 20, 30), partition_by=[], evolve_layout=True)
+    check()
+    assert t.snapshot()["layouts"] == [[], ["part"]]
+    t.delete_where({"id": (0, 4)})
+    check()
+    t.delete_where({"id": (5, 6)}, mode="merge-on-read")
+    check()
+    t.rename_column("id", "key")
+    check()
+    t.rollback(1)
+    check()
+    t.compact(target_file_bytes=1 << 30, partition_by=["part"])
+    check()
+    t.overwrite(_df(spark, 0, 5))
+    check()
+    assert t.snapshot()["layouts"] == [[]]
+
+    # a head without the field (an older writer): the guard falls back
+    # to the file list and the next commit records the field again
+    t2 = SnapshotTable(spark, str(tmp_path / "t2"))
+    t2.append(_df(spark, 0, 10), partition_by=["part"])
+    snap = t2.snapshot()
+    snap.pop("layouts")
+    t2._write_text(t2._vpath(0), json.dumps(snap))
+    with pytest.raises(ValueError, match="mixed partition layout"):
+        t2.append(_df(spark, 10, 20), partition_by=[])
+    t2.append(_df(spark, 10, 20))
+    assert t2.snapshot()["layouts"] == [["part"]]
