@@ -842,6 +842,7 @@ def main(argv: list[str] | None = None) -> int:
             f"{args.prepare_corpus}/packed"
         )
         funnel = res["stats"]()
+        res["release"]()
         if res["mixture"] is not None:
             funnel["mixture"] = res["mixture"].sources
         print(json.dumps(funnel))

@@ -101,14 +101,20 @@ def prepare_corpus(
     split_spec: dict[str, float] | None = None,
     split_seed: int = 0,
 ) -> dict:
-    """Run the full preparation flow. NOTE: the near-dedup phase runs
-    EAGERLY at call time — this is a pipeline runner, not a plan
-    builder: the SimHash pair stage's bucket-stats job reads every
-    exact-deduped row, and connected components checkpoints the rep
-    pairs, then labels them on the driver when they fit the broadcast
-    threshold or in Spark rounds when they do not. On a real cluster
-    pass ``checkpoint_dir`` so those checkpoints are reliable
-    checkpoint() (executor-loss-safe) instead of localCheckpoint (see
+    """Run the full preparation flow. NOTE: this is a pipeline runner,
+    not a plan builder: it runs Spark jobs at call time.
+    - Its pins are EAGER checkpoints, one job each: the exact-deduped
+      frame always; the near-deduped frame with ``paragraph_dedup`` or
+      ``remove_spans``; the paragraph-deduped frame with both. Every
+      later plan, ``packed`` and the caller's write included, reads a
+      pin as one leaf instead of re-planning the lineage above it.
+    - The near-dedup phase: the SimHash pair stage's bucket-stats job,
+      then connected components, which checkpoints the rep pairs and
+      labels them on the driver when they fit the broadcast threshold,
+      in Spark rounds when they do not.
+    On a real cluster pass ``checkpoint_dir``: the pins and connected
+    components' checkpoints are then reliable checkpoint() files
+    (executor-loss-safe) instead of localCheckpoint blocks (see
     connected_components).
 
     Returns a dict with the per-stage frames, a ``stats`` callable
@@ -116,10 +122,9 @@ def prepare_corpus(
     funnel counts are observed (``DataFrame.observe``) on actions that
     run anyway, so stats() after a full action on ``packed`` runs no
     Spark job:
-    - n_input through n_exact_deduped: the SimHash stage's bucket-stats
-      job (``salted_self_pairs`` inside ``simhash_clusters``), which
-      this call runs itself; it fills the exact-dedup pin, and these
-      stages sit below it;
+    - n_input through n_exact_deduped: the exact-dedup checkpoint job,
+      which this call runs itself (a lazy checkpoint would report
+      these as 0);
     - n_near_deduped, n_decontaminated (the same value when no
       ``benchmark`` is given), n_sampled: the caller's first action on
       ``packed`` (budget sampling's own per-source pass fills the first
@@ -131,11 +136,16 @@ def prepare_corpus(
       the packing window.
     stats() counts any stage whose observation was not filled that
     way. The observed metrics stop packing's window from being pruned,
-    so a bare ``packed.count()`` still computes the bins. The exact,
-    near and paragraph-dedup pins (``_cache_swap``) run no action: the
-    bucket-stats job fills the exact-dedup pin, the caller's first
-    action on ``packed`` the other two. ``release()`` unpersists this
-    call's pins unless a later call replaced them.
+    so a bare ``packed.count()`` still computes the bins.
+
+    ``release()`` drops this call's checkpoints: their blocks, and with
+    ``checkpoint_dir`` their files. Call it when done with the result
+    (after stats()). From then on every returned frame below a pin
+    (all but quality_pass) raises if read; none returns rows. Another
+    call's checkpoints are untouched. Not this call's to drop: the
+    operators' one live cache per session (SimHash codes, boilerplate
+    lines), and the checkpoints of connected components' rounds path,
+    which Spark's cleaner frees.
 
     Keys: quality_pass (n_url_deduped in stats when ``dedup_url_col``
     is set), exact_deduped, near_deduped (post-semantic-dedup
@@ -175,30 +185,35 @@ def prepare_corpus(
     training window ever mixes splits, and membership survives reruns
     and cluster resizes (the eval-contamination guard).
     """
-    swapped: list[tuple[str, DataFrame]] = []
+    reliable = checkpoint_dir is not None
+    if reliable:
+        docs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    pins: list[DataFrame] = []
     # funnel key -> (observed frame, its observation)
     stages: dict[str, tuple[DataFrame, Observation]] = {}
 
-    def _swap(key: str, frame: DataFrame) -> DataFrame:
-        frame = D._cache_swap(key, frame)
-        swapped.append((key, frame))
+    def _pin(frame: DataFrame) -> DataFrame:
+        # eager: the checkpoint job fills the observations below it (a
+        # lazy one would report them as 0), and every later plan, the
+        # caller's write included, starts from this leaf
+        frame = D._ckpt(frame, reliable)
+        pins.append(frame)
         return frame
 
     def _stage(key: str, frame: DataFrame) -> DataFrame:
         # a caller's partial action on a returned frame must not be the
         # first to fill an observation: each observed frame is either
-        # run in full inside this call (up to exact dedup, by the SimHash
-        # bucket-stats job) or reaches the caller only through `packed`
+        # run in full inside this call (up to exact dedup, by its
+        # checkpoint job) or reaches the caller only through `packed`
         obs = Observation()
         frame = _observe(frame, obs)
         stages[key] = (frame, obs)
         return frame
 
     def release() -> None:
-        """Unpersist this call's own live caches, unless a later call
-        replaced them."""
-        for key, frame in swapped:
-            D._cache_release(key, frame)
+        """Drop this call's checkpoints; its frames raise if read after."""
+        for frame in pins:
+            D._ckpt_release(frame)
 
     if strip_boilerplate:
         from dataval_spark.operators.boilerplate import remove_boilerplate_lines
@@ -207,10 +222,10 @@ def prepare_corpus(
         docs = remove_boilerplate_lines(
             docs, id_col, text_col, max_occurrences=boilerplate_max_occurrences
         )
-    # every stage up to exact dedup is observed under the SimHash
-    # bucket-stats job that fills the exact-dedup pin, before this call
-    # returns; each funnel stage gets its own count so attrition is
-    # attributed to the right stage (URL dedup BEFORE the domain filter)
+    # every stage up to exact dedup is observed under the exact-dedup
+    # checkpoint job, before this call returns; each funnel stage gets
+    # its own count so attrition is attributed to the right stage (URL
+    # dedup BEFORE the domain filter)
     docs = _stage("n_input", docs)
     if dedup_url_col is not None:
         from dataval_spark.operators.urls import url_dedup_key
@@ -283,10 +298,8 @@ def prepare_corpus(
 
     # pin: everything downstream (the SimHash codes, the keep-canonical
     # anti-join, and the user's final writes) re-derives this scan +
-    # fingerprint-window shuffle otherwise. Bounded by the same
-    # one-live-cache swap as the pair operators.
-    exact_deduped = _swap(
-        "prepare_corpus_exact_deduped",
+    # fingerprint-window shuffle otherwise
+    exact_deduped = _pin(
         _stage(
             "n_exact_deduped",
             D.dedup_keep_first(
@@ -339,7 +352,7 @@ def prepare_corpus(
         # both layers consume their input TWICE (fingerprint groupBy +
         # join back), which would re-derive the whole upstream funnel
         # per use — pin the post-doc-dedup frame once
-        near_deduped = _swap("prepare_corpus_near_deduped", near_deduped)
+        near_deduped = _pin(near_deduped)
 
     if paragraph_dedup:
         from dataval_spark.operators.paragraphs import dedup_paragraphs
@@ -354,7 +367,7 @@ def prepare_corpus(
         if paragraph_dedup:
             # the span pass reads its input twice too; don't re-run the
             # paragraph rebuild for each use
-            near_deduped = _swap("prepare_corpus_para_deduped", near_deduped)
+            near_deduped = _pin(near_deduped)
         # substring-level pass runs on the already-document-deduped
         # corpus (Lee et al.'s ExactSubstr layer: near-dup docs share
         # long spans without being near-dups; rewrite, not row drop)

@@ -41,10 +41,13 @@ def content_bearing(text: Column) -> Column:
     return token_count(text) > 0
 
 
-# One live cache per (operator, session): the pair-join operators
-# persist a small derived frame (codes / band keys) so the self-join
-# does not re-evaluate the hash expressions per side, but they return a
-# lazy result and so cannot unpersist it themselves. The pin runs no
+# One live cache per (operator, session), for operator-level pins only:
+# the pair-join operators persist a small derived frame (codes / band
+# keys) so the self-join does not re-evaluate the hash expressions per
+# side (boilerplate lines and incremental signatures likewise), but they
+# return a lazy result and so cannot unpersist it themselves. Pipeline
+# runners that can free what they pin (prepare_corpus) checkpoint with
+# _ckpt instead and release their own checkpoints. The pin runs no
 # action: the first action that reads the frame fills it (for the pair
 # operators, salted_self_pairs' bucket-stats job), and the block
 # manager's per-partition locks compute each partition once however
@@ -72,18 +75,6 @@ def _cache_swap(key: str, df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _live_caches[skey] = df
     return df
-
-
-def _cache_release(key: str, df: DataFrame) -> None:
-    """Unpersist ``df`` only while it is still the live entry for ``key``
-    (a later call's entry is that call's to release)."""
-    skey = (key, id(df.sparkSession))
-    if _live_caches.get(skey) is df:
-        del _live_caches[skey]
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # stopped/replaced session: nothing left to unpersist
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -725,6 +716,38 @@ def _filled(observations: list[Observation], sc) -> dict:
     return {obs: obs.get for obs in observations if done(obs)}
 
 
+def _ckpt(df: DataFrame, reliable: bool, eager: bool = True) -> DataFrame:
+    """``df`` re-rooted on its computed rows: every later plan reads the
+    checkpoint as a single leaf, not ``df``'s lineage.
+
+    ``reliable`` (a checkpoint dir is set): ``checkpoint()``, whose
+    blocks survive executor loss; always eager, since a lazy one would
+    compute the frame a second time to write the files. Otherwise
+    ``localCheckpoint(eager)``. ``eager=False`` leaves the fill to the
+    caller's next action: only safe when that one action runs before
+    the frame fans out into a multi-consumer job (a lazily marked RDD
+    read twice WITHIN one job is computed twice, racing the block
+    store), and an Observation inside the frame then reads 0: it is
+    posted when this call returns, before the fill ran a row."""
+    if reliable:
+        return df.checkpoint()
+    return df.localCheckpoint(eager=eager)
+
+
+def _ckpt_release(df: DataFrame) -> None:
+    """Drop a checkpoint _ckpt made: its blocks and, for a reliable one,
+    its files. A frame read from it raises from then on: a checkpoint
+    has no lineage to recompute from."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    rdd.unpersist(False)
+    path = rdd.getCheckpointFile()
+    if path.isDefined():
+        jvm = df.sparkSession._jvm
+        p = jvm.org.apache.hadoop.fs.Path(path.get())
+        conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+        p.getFileSystem(conf).delete(p, True)
+
+
 def connected_components(
     ids: DataFrame, pairs: DataFrame, id_col: str = "doc", max_iter: int = 25,
     checkpoint_dir: str | None = None, strict: bool = True,
@@ -745,10 +768,11 @@ def connected_components(
       vectorized numpy pass labels every endpoint (_component_min, ids
       kept in their own dtype: bigints above 2^53 stay exact); the
       labels of the non-minimum nodes go back as a local frame,
-      left-joined onto ``ids``. No per-round checkpoints, pins or
-      probes: a near-dup rep graph is usually this small (the sf1.0
-      corpus's 223k pairs are ~5 MB), and the rounds' cost on it is
-      per-stage job latency, not data.
+      left-joined onto ``ids``, and the pair checkpoint is dropped.
+      No per-round checkpoints, pins or probes: a near-dup rep graph
+      is usually this small (the sf1.0 corpus's 223k pairs are
+      ~5 MB), and the rounds' cost on it is per-stage job latency,
+      not data.
     * Rounds — the scale path above that bound: min-label propagation
       with PATH HALVING. Each round a node takes the min over its own
       label, its neighbors' labels, and its label's label (one pointer
@@ -793,25 +817,9 @@ def connected_components(
     constraint from ``ids``' lineage crosses the union (checkpointing
     does not help — LogicalRDD propagates constraints).
     """
-    if checkpoint_dir is not None:
-        sc = ids.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame, eager_needed: bool = True) -> DataFrame:
-            # reliable checkpoints are ALWAYS eager: lazy would recompute
-            # the (unpersisted) frame a second time to write the files
-            return df.checkpoint()
-    else:
-
-        def _ckpt(df: DataFrame, eager_needed: bool = True) -> DataFrame:
-            # eager_needed=False defers materialization to the caller's
-            # own convergence action (count/agg), folding the two driver
-            # round-trips per iteration into one. Only safe when the
-            # caller runs exactly one action before the frame fans out
-            # into a multi-consumer job (a localCheckpoint-marked RDD
-            # consumed twice WITHIN one job would be computed twice,
-            # racing the block store).
-            return df.localCheckpoint(eager=eager_needed)
+    reliable = checkpoint_dir is not None
+    if reliable:
+        ids.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     # checkpoint the DIRECTED pair set first, THEN mirror it: the two
     # union branches are different projections over the same join
     # subtree, so a single checkpoint of the union evaluated the whole
@@ -820,15 +828,20 @@ def connected_components(
     n_raw = Observation()
     raw = _ckpt(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .observe(n_raw, F.count(F.lit(1)).alias("n"))
+        .observe(n_raw, F.count(F.lit(1)).alias("n")),
+        reliable,
     )
     if _broadcast_sized(raw, n_raw):
-        return _cc_driver(ids.select(F.col(id_col).alias("doc")), raw, strict)
+        labels = _cc_driver(ids.select(F.col(id_col).alias("doc")), raw, strict)
+        _ckpt_release(raw)  # the moved labels are a local frame
+        return labels
     edges = _ckpt(
-        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        reliable,
     )
     labels = _ckpt(
-        ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label"))
+        ids.select(F.col(id_col).alias("doc"), F.col(id_col).alias("label")),
+        reliable,
     )
     if strict:
         ends = raw.select(F.explode(F.array("a", "b")).alias("doc"))
@@ -836,7 +849,7 @@ def connected_components(
         sample = [r.doc for r in orphans.collect()]
         if sample:
             raise _seed_error(sample)
-    return _cc_rounds(edges, labels, max_iter, _ckpt)
+    return _cc_rounds(edges, labels, max_iter, reliable)
 
 
 def _broadcast_sized(raw: DataFrame, n_raw: Observation) -> bool:
@@ -932,7 +945,7 @@ def _component_min(a, b):
     return nodes[moved], nodes[lab[moved]]
 
 
-def _cc_rounds(edges, labels, max_iter, _ckpt) -> DataFrame:
+def _cc_rounds(edges, labels, max_iter, reliable) -> DataFrame:
     """connected_components' scale path: path-halving rounds over the
     mirrored ``edges`` from the seed ``labels`` (doc, label)."""
 
@@ -991,7 +1004,7 @@ def _cc_rounds(edges, labels, max_iter, _ckpt) -> DataFrame:
             "doc", F.col("label").alias("old"), F.col("label").alias("label")
         )
         r1 = _half_round(start).persist(StorageLevel.MEMORY_AND_DISK)
-        halved = _ckpt(_half_round(r1), eager_needed=False)
+        halved = _ckpt(_half_round(r1), reliable, eager=False)
         changed = halved.where(F.col("label") != F.col("old")).count()
         r1.unpersist()
         labels = halved.select("doc", "label")

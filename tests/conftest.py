@@ -13,6 +13,12 @@ from dataval_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: runs for tens of seconds (e.g. starts a local cluster)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="dataval_spark_tests", master="local[8]", shuffle_partitions=16)

@@ -264,8 +264,12 @@ def test_cli_clean_compare_workflow(input_dir, tmp_path, spark, capsys):
 def test_cli_prepare_corpus(spark, tmp_path, capsys):
     """--prepare-corpus runs the full pipeline end-to-end from the CLI
     (reference CLI-first ethos): attrition-funnel JSON on stdout, packed
-    corpus written lang-partitioned, exit 0."""
+    corpus written lang-partitioned, exit 0. It releases what it pinned:
+    the only RDDs it leaves registered are the operators' live caches
+    (one per operator per session, swapped out by the next call)."""
     import json as _json
+
+    from dataval_spark.operators import dedup as D
 
     base = (
         "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -293,12 +297,22 @@ def test_cli_prepare_corpus(spark, tmp_path, capsys):
     spark.createDataFrame([(100, bench_text)], "doc_id long, text string") \
         .write.parquet(bench_path)
 
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
     rc = cli_main([
         "--input", docs_path, "--prepare-corpus", out_dir,
         "--benchmark", bench_path, "--min-tokens", "5",
         "--pack-shards", "2", "--cpus", "8",
     ])
     assert rc == 0
+    left = set(sc._jsc.getPersistentRDDs().keys()) - before
+    live = {
+        f._jdf.queryExecution().withCachedData().cacheBuilder()
+        .cachedColumnBuffers().id()
+        for (_, sid), f in D._live_caches.items()
+        if sid == id(spark) and f.is_cached
+    }
+    assert left <= live, (left, live)
     funnel = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert funnel["n_input"] == 7
     assert funnel["n_quality_pass"] == 5

@@ -1086,8 +1086,9 @@ def test_prepare_corpus_stats_observed(spark, tmp_path):
 
 def test_cache_swap_pins_lazily(spark):
     """_cache_swap starts no Spark job: the first action that reads the
-    pinned frame fills the cache, and _cache_release drops it."""
-    from dataval_spark.operators.dedup import _cache_release, _cache_swap
+    pinned frame fills the cache, and the next swap under the same key
+    drops it."""
+    from dataval_spark.operators.dedup import _cache_swap
 
     sc = spark.sparkContext
 
@@ -1104,17 +1105,13 @@ def test_cache_swap_pins_lazily(spark):
     assert pinned.groupBy("k").count().count() == 7
     filled = cached_rdds() - before
     assert len(filled) == 1
-    _cache_release("lazy_pin_probe", pinned)
+    successor = _cache_swap("lazy_pin_probe", df.select("id"))
     assert not pinned.storageLevel.useMemory
     assert not (cached_rdds() & filled)
+    successor.unpersist()
 
 
-def test_prepare_corpus_release_unpersists_own_caches(spark):
-    """release() drops the live caches the call pinned itself (exact,
-    near and paragraph dedup), but not another call's that replaced
-    them."""
-    from dataval_spark.operators.corpus import prepare_corpus
-
+def _paragraph_fixture(spark):
     quote = "a famous passage quoted verbatim in many documents exactly"
     rows = [
         (1, "own opening paragraph with sufficient words\n\n" + quote, "en"),
@@ -1122,31 +1119,80 @@ def test_prepare_corpus_release_unpersists_own_caches(spark):
         (3, "third document fully original text with enough tokens", "en"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    kw = dict(min_tokens=3, paragraph_dedup=True, remove_spans=True, span_tokens=8)
+    return docs, dict(min_tokens=3, paragraph_dedup=True, remove_spans=True,
+                      span_tokens=8)
+
+
+def test_prepare_corpus_release_unpersists_own_caches(spark):
+    """release() drops exactly the checkpoints the call pinned itself
+    (exact, near and paragraph dedup), told apart by their RDD ids, and
+    leaves another live call's alone. A frame below a released pin
+    raises if read: a checkpoint has no lineage to recompute from."""
+    from py4j.protocol import Py4JJavaError
+
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    docs, kw = _paragraph_fixture(spark)
     sc = spark.sparkContext
 
-    def cached_frames() -> int:
-        # DataFrame caches are named after their plan; the unnamed
-        # localCheckpoint RDDs of the CC rounds are left to the cleaner
-        rdds = sc._jsc.getPersistentRDDs().values()
-        return sum(1 for rdd in rdds if rdd.name() is not None)
+    def checkpoints() -> set:
+        rdds = sc._jsc.getPersistentRDDs()
+        return {k for k in rdds.keys() if rdds[k].rdd().isCheckpointed()}
 
-    # the SimHash operator's own live caches swap one for one from the
-    # second call on; the near and paragraph-dedup pins are filled by
-    # the first action on `packed`
-    prepare_corpus(docs, **kw)["release"]()
-    before = cached_frames()
+    # the pins are eager: each call registers its three at call time
+    before = checkpoints()
     first = prepare_corpus(docs, **kw)
-    first["packed"].collect()
-    assert cached_frames() == before + 3
+    own_first = checkpoints() - before
     second = prepare_corpus(docs, **kw)
-    second["packed"].collect()
-    first["release"]()  # its entries were already replaced by second's
-    assert second["exact_deduped"].storageLevel.useMemory
-    assert cached_frames() == before + 3
+    own_second = checkpoints() - before - own_first
+    assert len(own_first) == len(own_second) == 3
+    first["release"]()
+    assert checkpoints() - before == own_second
+    assert second["packed"].count() == 3
     second["release"]()
-    assert not second["exact_deduped"].storageLevel.useMemory
-    assert cached_frames() == before
+    assert not checkpoints() - before
+    with pytest.raises(Py4JJavaError, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        second["exact_deduped"].collect()
+
+
+def test_prepare_corpus_release_deletes_reliable_checkpoints(spark, tmp_path):
+    """With checkpoint_dir the pins are reliable checkpoints: release()
+    deletes their files, so a released frame raises instead of reading
+    them back."""
+    import glob
+
+    from py4j.protocol import Py4JJavaError
+
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    docs, kw = _paragraph_fixture(spark)
+    ckpt = str(tmp_path / "ckpt")
+    out = prepare_corpus(docs, checkpoint_dir=ckpt, **kw)
+    assert len(glob.glob(f"{ckpt}/*/rdd-*")) == 3
+    assert out["packed"].count() == 3
+    out["release"]()
+    assert not glob.glob(f"{ckpt}/*/rdd-*")
+    with pytest.raises(Py4JJavaError):
+        out["exact_deduped"].collect()
+
+
+def test_prepare_corpus_packed_plan_reads_pins_as_leaves(spark):
+    """`packed`'s analysed plan starts from the last pin's checkpoint, so
+    planning it, and each adaptive re-plan of the caller's write, does
+    not walk the lineage above the pins (the persisted pins of the
+    corpus benchmark kept 117 scan leaves over one input file). The
+    pins must be eager for the funnel to stay exact: a lazy checkpoint
+    reports the observations below it as 0, and
+    test_prepare_corpus_stats_observed pins the exact funnel."""
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    docs, kw = _paragraph_fixture(spark)
+    out = prepare_corpus(docs, strip_boilerplate=True, split_long=True,
+                         window_tokens=8, **kw)
+    leaves = out["packed"]._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() <= 4
+    assert out["packed"].count() > 0
+    out["release"]()
 
 
 def test_text_ops_unicode_and_edge_cases(spark):
