@@ -838,9 +838,12 @@ def main(argv: list[str] | None = None) -> int:
             span_tokens=args.span_tokens,
             split_long=args.split_long,
         )
-        res["packed"].write.mode("overwrite").partitionBy("lang").parquet(
-            f"{args.prepare_corpus}/packed"
-        )
+        # clustered by its directory key, like every partitioned write of
+        # the CLI (a rebalance hint): a lang lands in one file, not in one
+        # per write task that holds some of its rows
+        res["packed"].hint("rebalance", "lang").write.mode("overwrite").partitionBy(
+            "lang"
+        ).parquet(f"{args.prepare_corpus}/packed")
         funnel = res["stats"]()
         res["release"]()
         if res["mixture"] is not None:
@@ -934,12 +937,10 @@ def main(argv: list[str] | None = None) -> int:
             # derive from the same persisted flagged frame
             shared_result = suite.run(df, persist=True, keep_extra=tuple(df.columns))
             cleaned, quarantine = suite.split_flagged(shared_result.flagged, df.columns)
-        cleaned.write.mode("overwrite").partitionBy(suite.part_col).parquet(
-            f"{args.clean_output}/cleaned"
-        )
-        quarantine.write.mode("overwrite").partitionBy(suite.part_col).parquet(
-            f"{args.clean_output}/quarantine"
-        )
+        for name, out in (("cleaned", cleaned), ("quarantine", quarantine)):
+            out.hint("rebalance", suite.part_col).write.mode("overwrite").partitionBy(
+                suite.part_col
+            ).parquet(f"{args.clean_output}/{name}")
         if args.manifest and clean_flagged is not None:
             # drop ONLY clean's persist — clearCache() here would evict
             # every cached frame of an embedding session (tests, library
@@ -971,14 +972,13 @@ def main(argv: list[str] | None = None) -> int:
             )
             io.replace(result.violations, "violations", partition_by=["part"])
         elif writing:
-            result.row_verdicts.write.mode("overwrite").partitionBy("part").parquet(
-                f"{args.output}/verdicts"
-            )
+            for name, out in (("verdicts", result.row_verdicts),
+                              ("violations", result.violations)):
+                out.hint("rebalance", "part").write.mode("overwrite").partitionBy(
+                    "part"
+                ).parquet(f"{args.output}/{name}")
             result.partition_verdicts.coalesce(1).write.mode("overwrite").parquet(
                 f"{args.output}/partition_verdicts"
-            )
-            result.violations.write.mode("overwrite").partitionBy("part").parquet(
-                f"{args.output}/violations"
             )
         result.unpersist()
 

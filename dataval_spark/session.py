@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _task_slots(master: str, cpus: int) -> int:
+    """Concurrent task slots a master URL asks for: N from ``local[N]`` or
+    ``local[N,F]`` (F = task retries), E×C from ``local-cluster[E,C,M]``,
+    and ``cpus`` for ``*`` or a master without a bracket."""
+    if "[" not in master:
+        return cpus
+    args = master[master.find("[") + 1 : master.find("]")].split(",")
+    if master.startswith("local-cluster"):
+        return int(args[0]) * int(args[1])
+    return cpus if args[0].strip() == "*" else int(args[0])
+
+
 def get_spark(
     app_name: str = "dataval_spark",
     master: str | None = None,
@@ -22,11 +34,10 @@ def get_spark(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    # local[N] → N concurrent tasks; shuffle partitions ~ 2×tasks keeps all
-    # cores busy through AQE coalesce without tiny-partition overhead.
+    # shuffle partitions ~ 2×task slots keeps all cores busy through AQE
+    # coalesce without tiny-partition overhead.
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-        shuffle_partitions = cpus * 2 if n == "*" else max(8, int(n) * 2)
+        shuffle_partitions = max(8, _task_slots(master, cpus) * 2)
 
     builder = (
         SparkSession.builder.master(master)
@@ -52,6 +63,15 @@ def get_spark(
         # Capping at 8000 makes oversized stages fall back to smaller
         # JIT-able units — measured 4x faster on the full suite.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Static conf: Spark's LRU of compiled classes holds 100 entries by
+        # default, but the pipelines here generate more distinct classes
+        # than that (CodegenMetrics compiles in one fresh session: one
+        # prepare_corpus op plus its packed write 172, then
+        # transcript_suite 32 more, then the 50 queries at sf0.01 623
+        # more; 835 in all), so each repeat op recompiled nearly all of
+        # them in Janino and ran them cold in the interpreter. 1000 holds
+        # that working set; each JVM (driver, executors) keeps its own.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # reliable checkpoint() files (connected_components' cluster
         # mode writes one labels snapshot per round) are deleted when
         # their RDD is GC'd instead of accumulating until manual cleanup

@@ -5,6 +5,7 @@ method dispatch) — the reference's resume / exit-code behaviors
 from __future__ import annotations
 
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -322,6 +323,48 @@ def test_cli_prepare_corpus(spark, tmp_path, capsys):
     packed = spark.read.parquet(f"{out_dir}/packed")
     assert {r.doc_id for r in packed.select("doc_id").collect()} == {1, 7}
     assert {"bin", "lang", "n_tok"} <= set(packed.columns)
+
+
+def test_cli_partitioned_writes_one_file_per_partition(spark, tmp_path, capsys):
+    """Every partitioned CLI write is clustered by its directory key: an
+    input of 3 files, each holding rows of every partition, still writes
+    one file per partition directory (unclustered, each write task
+    writes its own file into every directory it has rows for)."""
+    def files_per_dir(root: str) -> dict:
+        dirs = {}
+        for d, _, names in os.walk(root):
+            n = sum(1 for f in names if f.endswith(".parquet"))
+            if n:
+                dirs[os.path.relpath(d, root)] = n
+        return dirs
+
+    d = str(tmp_path / "input")
+    transcripts(spark, n_convs=120, seed=2187, n_parts=4).repartition(3).write.parquet(d)
+    out, co = str(tmp_path / "out"), str(tmp_path / "clean")
+    assert cli_main(["--input", d, "--output", out, "--cpus", "8"]) in (0, 3, 4)
+    assert cli_main(["--input", d, "--clean-output", co, "--validate",
+                     "--cpus", "8"]) in (0, 3, 4)
+
+    # ~3 MB of incompressible text in 8 pack shards per lang: enough that
+    # AQE keeps several write tasks, so an unclustered write splits a lang
+    rng = random.Random(5)
+    rows = [(i, " ".join("%08x" % rng.getrandbits(32) for _ in range(120)),
+             ("en", "de")[i % 2]) for i in range(3000)]
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string, lang string") \
+        .repartition(3).write.parquet(docs)
+    corpus = str(tmp_path / "corpus")
+    assert cli_main(["--input", docs, "--prepare-corpus", corpus,
+                     "--min-tokens", "5", "--pack-shards", "8", "--cpus", "8"]) == 0
+
+    for root, key in ((f"{out}/verdicts", "part"), (f"{out}/violations", "part"),
+                      (f"{co}/cleaned", "part"), (f"{co}/quarantine", "part"),
+                      (f"{corpus}/packed", "lang")):
+        dirs = files_per_dir(root)
+        assert dirs and all(k.startswith(f"{key}=") for k in dirs), (root, dirs)
+        assert set(dirs.values()) == {1}, (root, dirs)
+    assert len(files_per_dir(f"{out}/verdicts")) == 4
+    assert len(files_per_dir(f"{corpus}/packed")) == 2
 
 
 def test_cli_prepare_corpus_web_flags(spark, tmp_path, capsys):
