@@ -413,11 +413,18 @@ def _read_input(spark, path: str, since_version: int | None):
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
+    from pyspark.sql import SparkSession
+
     from dataval_spark.manifest import run_resumable
     from dataval_spark.session import get_spark
 
     master = args.master or (f"local[{args.cpus}]" if args.cpus else None)
-    spark = get_spark(app_name="dataval_spark_cli", master=master)
+    # an in-process caller's session is used as it is: getOrCreate would
+    # re-apply get_spark's runtime confs (shuffle width, broadcast
+    # threshold) to it
+    spark = SparkSession.getActiveSession() or get_spark(
+        app_name="dataval_spark_cli", master=master
+    )
 
     if args.anomaly_scan:
         from dataval_spark.manifest import anomaly_scan

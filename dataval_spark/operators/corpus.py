@@ -108,10 +108,13 @@ def prepare_corpus(
       ``remove_spans``; the paragraph-deduped frame with both. Every
       later plan, ``packed`` and the caller's write included, reads a
       pin as one leaf instead of re-planning the lineage above it.
-    - The near-dedup phase: the SimHash pair stage's bucket-stats job,
-      then connected components, which checkpoints the rep pairs and
-      labels them on the driver when they fit the broadcast threshold,
-      in Spark rounds when they do not.
+    - The near-dedup phase (simhash_clusters): one count over the
+      distinct SimHash codes. When the codes and their pigeonhole
+      candidates fit the broadcast threshold, the codes are collected
+      once and one numpy pass finds and labels the near pairs on the
+      driver. Above it, the salted pair join's bucket-stats job, then
+      connected components, which checkpoints the rep pairs and labels
+      them on the driver or in Spark rounds by the same rule.
     On a real cluster pass ``checkpoint_dir``: the pins and connected
     components' checkpoints are then reliable checkpoint() files
     (executor-loss-safe) instead of localCheckpoint blocks (see
@@ -308,7 +311,7 @@ def prepare_corpus(
         ),
     )
 
-    # exact-code collapse first: the pair join + CC run on distinct
+    # exact-code collapse first: the pair search + CC run on distinct
     # simhash codes, not documents — same labels, measured 3x on the
     # template-heavy test corpus (see simhash_clusters docstring)
     labels = D.simhash_clusters(

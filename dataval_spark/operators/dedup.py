@@ -852,18 +852,23 @@ def connected_components(
     return _cc_rounds(edges, labels, max_iter, reliable)
 
 
+def _broadcast_limit(spark) -> int:
+    """The session's parsed ``spark.sql.autoBroadcastJoinThreshold`` in
+    bytes (the conf accepts size strings such as ``10MB``); -1 is off.
+    A frame fits it when rows × (8 bytes of row overhead + Spark's
+    per-row column widths) is within it, Spark's own estimate."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def _broadcast_sized(raw: DataFrame, n_raw: Observation) -> bool:
     """Whether the checkpointed pair set ``raw`` (row count observed
-    into ``n_raw``) fits the broadcast-join threshold. The threshold is
-    the session's parsed value: the conf accepts size strings such as
-    ``10MB``."""
+    into ``n_raw``) fits the broadcast-join threshold."""
     spark = raw.sparkSession
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    limit = _broadcast_limit(spark)
     if limit < 0:
         return False
     seen = _filled([n_raw], spark.sparkContext)
     n = seen[n_raw]["n"] if n_raw in seen else raw.count()
-    # Spark's row-size estimate: 8 bytes of row overhead + column widths
     return n * (8 + raw._jdf.schema().defaultSize()) <= limit
 
 
@@ -1022,8 +1027,8 @@ def simhash_clusters(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(doc, cluster) SimHash near-dup labels with an EXACT-CODE
-    COLLAPSE before the pair join — the scale path for cluster assembly
-    when you don't need the pair enumeration itself.
+    COLLAPSE before the pair search — the scale path for cluster
+    assembly when you don't need the pair enumeration itself.
 
     Template-heavy web corpora put thousands of near-identical docs on
     the SAME simhash code; the pigeonhole join then enumerates all
@@ -1033,13 +1038,29 @@ def simhash_clusters(
     sharing a code are connectivity-equivalent to one representative:
     any cross pair (b, c) at ham <= h implies the same pair between
     their reps, and members reach their rep's component through the
-    code group. The pair join + CC therefore run on DISTINCT CODES (the
-    corpus's template count) and labels broadcast back through the
-    groups. Because each rep is the min doc of its code group, the
-    component-min labels are identical to what the uncollapsed
-    simhash_near_pairs + connected_components pipeline produces.
+    code group. The pair search + CC therefore run on DISTINCT CODES
+    (the corpus's template count), one (code, rep = min doc) group
+    each, and labels go back to the docs through their codes. Because
+    each rep is the min doc of its code group, the component-min labels
+    are identical to what the uncollapsed simhash_near_pairs +
+    connected_components pipeline produces.
 
-    checkpoint_dir passes through to connected_components.
+    One count over the pinned groups (it fills both pins) picks one of
+    two paths, with connected_components' size rule:
+
+    * Driver pass — when the groups fit the session's
+      ``spark.sql.autoBroadcastJoinThreshold`` (rows × (8 + Spark's row
+      size); -1 turns this path off) and so does the pigeonhole
+      candidate volume, counted from the per-chunk run lengths before
+      any pair is enumerated (8 + 16 bytes per candidate: two int64
+      indexes). The groups come to the driver as Arrow once, one numpy
+      pass finds the near pairs and labels them (_code_clusters), and
+      the (code, cluster) table is broadcast-joined onto the coded docs.
+      A near-dup code set is usually this small: the perfbench corpus
+      has ~480 distinct codes of 16 B.
+    * Spark — above either bound: code_near_pairs (salted_self_pairs)
+      over the reps, connected_components (checkpoint_dir passes
+      through to it), and the labels joined back through the groups.
     """
     coded = (
         df.where(content_bearing(F.col(text_col)))
@@ -1050,15 +1071,23 @@ def simhash_clusters(
         .select("doc", simhash_from_hashed(F.col("_ht"), bits).alias("code"))
     )
     coded = _cache_swap("simhash_clusters", coded)
-    # the (code, rep) aggregation is consumed FIVE times — both sides of
-    # the rep pair join, its adaptive stats pass, the CC seed ids, and
-    # the member join-back — and each consumer re-ran the groupBy
-    # shuffle (measured ~7 s of the corpus CC setup at sf1.0). One more
-    # live-cache entry pins it; it is one row per distinct code.
+    # the (code, rep) aggregation is consumed several times on either
+    # path — the size count and the collect, or both sides of the rep
+    # pair join, its adaptive stats pass, the CC seed ids and the member
+    # join-back — and each consumer re-ran the groupBy shuffle (measured
+    # ~7 s of the corpus CC setup at sf1.0). One more live-cache entry
+    # pins it; it is one row per distinct code.
     groups = _cache_swap(
         "simhash_clusters_groups",
         coded.groupBy("code").agg(F.min("doc").alias("rep")),
     )
+    limit = _broadcast_limit(df.sparkSession)
+    row = 8 + groups._jdf.schema().defaultSize()
+    if limit >= 0 and groups.count() * row <= limit:
+        local = _code_clusters(groups.toArrow(), bits, max_hamming, limit // 24)
+        if local is not None:
+            by_code = df.sparkSession.createDataFrame(local)
+            return coded.join(F.broadcast(by_code), "code").select("doc", "cluster")
     rep_coded = groups.select(F.col("rep").alias("doc"), "code")
     rep_pairs = code_near_pairs(rep_coded, bits, max_hamming)
     labels = connected_components(
@@ -1070,6 +1099,62 @@ def simhash_clusters(
     return member.join(
         labels.withColumnRenamed("doc", "rep"), "rep"
     ).select("doc", "cluster")
+
+
+def _code_clusters(groups, bits: int, max_hamming: int, max_pairs: int):
+    """simhash_clusters' driver pass over the collected (code, rep)
+    Arrow table: the (code, cluster) table, or None when the pigeonhole
+    candidates number more than ``max_pairs``.
+
+    Per chunk of _chunk_layout, the codes sorted by chunk value form
+    runs of equal values, and every pair inside a run is a candidate;
+    the run lengths give the volume before any pair is enumerated. The
+    uint64 view makes the shift logical, which the mask turns into the
+    same chunk value as Spark's arithmetic shiftright, sign bit or not.
+    A candidate is kept at popcount(xor) <= max_hamming (SWAR: numpy
+    1.26 has no bitwise_count); a pair agreeing on several chunks is
+    kept once per chunk, which _component_min does not mind. A group
+    with a NULL rep pairs with nothing and gets no label, as on the
+    Spark path. Labels are indexes into the sorted distinct reps, so the
+    ids keep their own dtype (bigints above 2^53 stay exact)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    groups = groups.filter(pc.is_valid(groups["rep"]))
+    code = groups["code"].to_numpy().view(np.uint64)
+    ids, node = np.unique(
+        groups["rep"].to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    runs = []
+    for lo, width in _chunk_layout(bits, max_hamming):
+        v = (code >> np.uint64(lo)) & np.uint64((1 << width) - 1)
+        order = np.argsort(v)
+        cut = np.r_[0, np.flatnonzero(np.diff(v[order])) + 1, len(v)]
+        # partners of each sorted position: the rest of its run
+        ahead = np.repeat(cut[1:], np.diff(cut)) - np.arange(len(v)) - 1
+        runs.append((order, ahead))
+    if sum(int(ahead.sum()) for _, ahead in runs) > max_pairs:
+        return None
+    ends = [], []  # one array per chunk; there is at least one
+    for order, ahead in runs:
+        first = np.repeat(np.arange(len(ahead)), ahead)
+        step = np.arange(len(first)) - np.repeat(np.cumsum(ahead) - ahead, ahead)
+        a, b = order[first], order[first + 1 + step]
+        x = code[a] ^ code[b]
+        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+        x = (x & np.uint64(0x3333333333333333)) + (
+            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
+        )
+        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+        near = (x * np.uint64(0x0101010101010101)) >> np.uint64(56) <= max_hamming
+        ends[0].append(node[a[near]])
+        ends[1].append(node[b[near]])
+    moved, root = _component_min(np.concatenate(ends[0]), np.concatenate(ends[1]))
+    lab = np.arange(len(ids))
+    lab[moved] = root
+    typ = groups.schema.field("rep").type
+    return pa.table({"code": groups["code"], "cluster": pa.array(ids[lab[node]], typ)})
 
 
 def keep_cluster_canonical(

@@ -66,9 +66,9 @@ def get_spark(
         # Static conf: Spark's LRU of compiled classes holds 100 entries by
         # default, but the pipelines here generate more distinct classes
         # than that (CodegenMetrics compiles in one fresh session: one
-        # prepare_corpus op plus its packed write 172, then
-        # transcript_suite 32 more, then the 50 queries at sf0.01 623
-        # more; 835 in all), so each repeat op recompiled nearly all of
+        # prepare_corpus op plus its packed write 148, then
+        # transcript_suite 34 more, then the 50 queries at sf0.01 636
+        # more; 818 in all), so each repeat op recompiled nearly all of
         # them in Janino and ran them cold in the interpreter. 1000 holds
         # that working set; each JVM (driver, executors) keeps its own.
         .config("spark.sql.codegen.cache.maxEntries", "1000")

@@ -182,6 +182,25 @@ def test_cli_validate_dry_run(input_dir, capsys):
     assert rc in (0, 3, 4)
 
 
+def test_cli_keeps_callers_session_confs(spark, input_dir):
+    """An in-process main() runs on the caller's active session as it
+    is: get_spark's getOrCreate would reset its runtime confs."""
+    want = {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    prev = {k: spark.conf.get(k) for k in want}
+    try:
+        for k, v in want.items():
+            spark.conf.set(k, v)
+        rc = cli_main(["--input", input_dir, "--validate", "--cpus", "8"])
+        assert rc in (0, 3, 4)
+        assert {k: spark.conf.get(k) for k in want} == want
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 def test_cli_single_method(input_dir, capsys):
     rc = cli_main(["--input", input_dir, "--method", "uniqueness", "--validate", "--cpus", "8"])
     assert rc in (0, 3)  # duplicates exist -> 3; partitions should not fail

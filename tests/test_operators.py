@@ -541,9 +541,10 @@ def test_ivf_global_dim_mismatch_fails_loudly(spark):
 
 @contextmanager
 def _cc_path_conf(spark, path):
-    """Session conf that routes connected_components down ``path``: the
-    session's broadcast threshold takes small graphs to the driver pass,
-    -1 forces the Spark rounds. Restored on exit."""
+    """Session conf that routes connected_components (and
+    simhash_clusters) down ``path``: the session's broadcast threshold
+    takes small graphs to the driver pass, -1 forces the Spark rounds
+    (and the Spark pair join). Restored on exit."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     if path == "rounds":
@@ -1123,6 +1124,29 @@ def _paragraph_fixture(spark):
                       span_tokens=8)
 
 
+@pytest.mark.parametrize("fixture", ["funnel", "paragraphs"])
+def test_prepare_corpus_same_on_both_near_dedup_paths(spark, fixture):
+    """prepare_corpus returns the same funnel and the same packed rows
+    whether its near-dedup stage takes the driver pass (the session's
+    broadcast threshold) or the Spark pair join + CC (-1)."""
+    from dataval_spark.operators.corpus import prepare_corpus
+
+    if fixture == "funnel":
+        docs, bench = _planted_funnel(spark)
+        kw = dict(benchmark=bench, min_tokens=5, window_tokens=10)
+    else:
+        docs, kw = _paragraph_fixture(spark)
+    seen = {}
+    for path in ("driver", "rounds"):
+        with _cc_path_conf(spark, path):
+            out = prepare_corpus(docs, **kw)
+            rows = sorted(map(tuple, out["packed"].collect()), key=repr)
+            seen[path] = out["stats"](), rows
+            out["release"]()
+    assert seen["driver"] == seen["rounds"]
+    assert seen["driver"][1]
+
+
 def test_prepare_corpus_release_unpersists_own_caches(spark):
     """release() drops exactly the checkpoints the call pinned itself
     (exact, near and paragraph dedup), told apart by their RDD ids, and
@@ -1688,37 +1712,139 @@ def test_prepare_corpus_split_long(spark):
     assert len(by_doc[2]) == 1 and by_doc[2][0].chunk_idx == 0
 
 
-def test_simhash_clusters_equivalent_to_uncollapsed_pipeline(spark):
-    """Exact-code collapse must produce byte-identical labels to the
-    full simhash_near_pairs + connected_components pipeline, including
-    on a template-heavy corpus where many docs share one code."""
+def _template_rows():
+    """(id, text): 120 distinct docs, 25 verbatim copies of one template
+    (one code), 10 near-misses of it, and 12 one-token variants of a
+    long text (distinct codes a few bits apart, so the pair search has
+    near pairs to find at 64 bits too)."""
     rows = [
         (i, f"unique doc {i} about subject {i % 13} rating {(i * 7) % 29} stars")
         for i in range(120)
     ]
-    # 25 verbatim template copies (one code) + 10 near-misses of it
     rows += [(500 + j, "the very same template text repeated verbatim")
              for j in range(25)]
     rows += [(600 + j, f"the very same template text repeated verbatim {j}")
              for j in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    long_text = " ".join(f"word{k}" for k in range(80))
+    rows += [(700 + j, f"{long_text} extra{j}") for j in range(12)]
+    return rows
 
-    pairs = D.simhash_near_pairs(df, "doc_id", bits=32, max_hamming=3)
-    ids = df.where(D.content_bearing(F.col("text"))).select(
-        F.col("doc_id").alias("doc")
+
+def test_simhash_clusters_equivalent_to_uncollapsed_pipeline(spark):
+    """Exact-code collapse must produce byte-identical labels to the
+    full simhash_near_pairs + connected_components pipeline, including
+    on a template-heavy corpus where many docs share one code, on both
+    of its paths (the driver pass, and the Spark pair join + CC)."""
+    df = spark.createDataFrame(_template_rows(), "doc_id long, text string")
+    for path in ("driver", "rounds"):
+        with _cc_path_conf(spark, path):
+            pairs = D.simhash_near_pairs(df, "doc_id", bits=32, max_hamming=3)
+            ids = df.where(D.content_bearing(F.col("text"))).select(
+                F.col("doc_id").alias("doc")
+            )
+            want = {
+                (r.doc, r.cluster)
+                for r in D.connected_components(ids, pairs).collect()
+            }
+            got = {
+                (r.doc, r.cluster)
+                for r in D.simhash_clusters(
+                    df, "doc_id", bits=32, max_hamming=3
+                ).collect()
+            }
+        assert got == want, path
+        # the template clique collapsed: all 25 copies share one cluster
+        clus = {d: c for d, c in got}
+        assert len({clus[500 + j] for j in range(25)}) == 1, path
+
+
+def _clusters_by_path(spark, monkeypatch, df, threshold=None, **kw):
+    """simhash_clusters' sorted (doc, cluster) rows and whether
+    salted_self_pairs ran, keyed "driver" (the session's broadcast
+    threshold, or ``threshold``) and "spark" (threshold -1)."""
+    calls = []
+    orig = D.salted_self_pairs
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(D, "salted_self_pairs", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    out = {}
+    try:
+        for path, value in (("driver", threshold or prev), ("spark", "-1")):
+            spark.conf.set(key, value)
+            calls.clear()
+            labels = D.simhash_clusters(df, "doc_id", **kw).collect()
+            rows = sorted(((r.doc, r.cluster) for r in labels), key=repr)
+            out[path] = rows, bool(calls)
+    finally:
+        spark.conf.set(key, prev)
+    return out
+
+
+@pytest.mark.parametrize("case", ["sign64", "string_ids", "big_ids", "nulls"])
+def test_simhash_clusters_driver_pass_matches_spark_path(spark, monkeypatch, case):
+    """The driver pass labels exactly as the Spark pair join + CC do:
+    64-bit codes with the sign bit set, string ids, bigint ids above
+    2^53 (a double cannot tell these apart), and NULL ids next to NULL
+    and blank text — a NULL id in a code group takes the group's
+    cluster, a group of NULL ids only gets no row, on both paths."""
+    rows, schema, bits = _template_rows(), "doc_id long, text string", 32
+    if case == "sign64":
+        bits = 64
+    elif case == "string_ids":
+        # unpadded, so string order differs from numeric order
+        rows = [(f"d{i}", t) for i, t in rows]
+        schema = "doc_id string, text string"
+    elif case == "big_ids":
+        rows = [((1 << 53) + 2 * i + 1, t) for i, t in rows]
+    else:
+        lone = "a text that only null ids carry in this corpus"
+        rows += [(None, rows[-1][1]), (None, lone), (None, lone),
+                 (900, None), (901, "   "), (902, "")]
+    df = spark.createDataFrame(rows, schema)
+    out = _clusters_by_path(spark, monkeypatch, df, bits=bits, max_hamming=3)
+    (driver, driver_joined), (spark_rows, spark_joined) = out["driver"], out["spark"]
+    assert driver == spark_rows
+    assert not driver_joined and spark_joined
+    # the pair search merged distinct codes, not just code groups
+    codes = df.where(D.content_bearing(F.col("text")) & F.col("doc_id").isNotNull())
+    n_codes = codes.select(D.simhash(F.col("text"), bits)).distinct().count()
+    assert len({c for _, c in driver}) < n_codes
+    if case == "sign64":
+        assert df.where(D.simhash(F.col("text"), 64) < 0).count() > 0
+    if case == "nulls":
+        assert (None, 700) in driver  # the NULL id copy of doc 711
+        assert all(d not in (900, 901, 902) for d, _ in driver)
+
+
+def test_simhash_clusters_empty_input(spark, monkeypatch):
+    """No content-bearing doc: both paths return no labels."""
+    df = spark.createDataFrame([(1, None), (2, " ")], "doc_id long, text string")
+    out = _clusters_by_path(spark, monkeypatch, df)
+    assert out["driver"] == ([], False)
+    assert out["spark"][0] == []
+
+
+def test_simhash_clusters_hot_bucket_takes_spark_path(spark, monkeypatch):
+    """A code set that fits the broadcast threshold but whose pigeonhole
+    candidates do not (16-bit codes: 4-bit chunks, so ~200 codes fill
+    each chunk value with ~12 codes, ~4,600 candidates × 24 B > 20 KB,
+    while 200 codes × 24 B fit) falls back to the Spark pair join, with
+    the same labels as the -1 run."""
+    rows = [
+        (i, f"doc {i} on topic {i % 17} with words {(i * 7) % 31} {(i * 11) % 23}")
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = _clusters_by_path(
+        spark, monkeypatch, df, threshold="20KB", bits=16, max_hamming=3
     )
-    want = {
-        (r.doc, r.cluster)
-        for r in D.connected_components(ids, pairs).collect()
-    }
-    got = {
-        (r.doc, r.cluster)
-        for r in D.simhash_clusters(df, "doc_id", bits=32, max_hamming=3).collect()
-    }
-    assert got == want
-    # the template clique collapsed: all 25 copies share one cluster
-    clus = {d: c for d, c in got}
-    assert len({clus[500 + j] for j in range(25)}) == 1
+    assert out["driver"] == out["spark"]
+    assert out["driver"][1]  # salted_self_pairs ran: the Spark path
 
 
 def test_prepare_corpus_regates_hollowed_docs(spark):
